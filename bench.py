@@ -435,12 +435,13 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, float]:
     (MetricsService.java:33-63): drive the flagship aggregate through the
     REAL incremental path — multi-file source, maxFilesPerTrigger=2 (so the
     run spans ~8 micro-batches with stateful window accumulation across
-    them), memory sink — and report wall time, input rows/s, and state
-    bytes from the query's own progress metrics (O1 mapping)."""
+    them), memory sink — and report wall time, input rows/s, and peak state
+    bytes from the query's own progress, mapped by ``progress_record``."""
     import shutil
     import tempfile
 
     from flink_stream_processing_spark.operators.window_metrics import as_transactions
+    from flink_stream_processing_spark.streaming.metrics import progress_record
     from flink_stream_processing_spark.streaming.pipeline import (
         events_file_stream,
         streaming_window_metrics,
@@ -473,21 +474,14 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, float]:
             q.stop()
             raise TimeoutError("streaming bench did not finish within 600 s")
         wall = time.perf_counter() - t0
-        rows = 0
-        state_bytes = 0
-        batches = 0
-        for p in q.recentProgress:
-            prog = p if isinstance(p, dict) else json.loads(p.json)
-            rows += int(prog.get("numInputRows") or 0)
-            batches += 1
-            for so in prog.get("stateOperators") or []:
-                state_bytes = max(state_bytes, int(so.get("memoryUsedBytes") or 0))
+        records = [progress_record(p) for p in q.recentProgress]
+        rows = sum(r["num_input_rows"] for r in records)
         return {
             "streaming_window_metrics_wall_sec": round(wall, 3),
             "streaming_input_rows": rows,
-            "streaming_micro_batches": batches,
+            "streaming_micro_batches": len(records),
             "streaming_rows_per_sec": round(rows / wall, 1) if wall > 0 else 0.0,
-            "streaming_state_bytes": state_bytes,
+            "streaming_state_bytes": max((r["state_bytes"] for r in records), default=0),
         }
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)

@@ -85,8 +85,6 @@ def spread_fanout(df: DataFrame, target: int | None = None) -> DataFrame:
     (round-robin repartition re-buckets rows, never drops/dups them); only
     safe above order-insensitive consumers, which every caller here is
     (hash/count/min aggregates, per-row projections)."""
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):  # measurement kill-switch
-        return df
     if not is_fanout_narrow(df, target):
         return df
     goal = target or df.sparkSession.sparkContext.defaultParallelism

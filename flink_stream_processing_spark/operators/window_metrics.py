@@ -137,7 +137,8 @@ def session_windows(
 ) -> DataFrame:
     """Per-key session windows with a fixed inactivity gap (§2.6 — absent in
     the reference). Spark's ``session_window`` merges events whose gap is
-    strictly less than ``gap``; the window end is last-event-time + gap."""
+    at most ``gap`` (events exactly ``gap`` apart share a session); the
+    window end is last-event-time + gap."""
     sw = F.session_window(F.col("ts"), gap)
     return (
         events.groupBy(F.col(key), sw.alias("w"))

@@ -46,14 +46,14 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Session windows, gap 10 min: oracle is the classic gaps-and-islands
-# construction. New session when the gap is >= 10 min (Spark's session
-# window end is exclusive: an event exactly at last+gap starts a new one).
+# construction. New session only when the gap is > 10 min: Spark merges
+# an event exactly at last+gap into the open session.
 _SESSION_ORACLE = """
 WITH o AS (
   SELECT user_id, ts,
          CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
                 OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                   >= INTERVAL 10 MINUTES
+                   > INTERVAL 10 MINUTES
               THEN 1 ELSE 0 END AS new_sess
   FROM events
 ),

@@ -14,9 +14,10 @@ closes that gap with a dependency-free exposition server:
   ``name{label="value"} 1.23`` samples, label-value escaping per the spec.
 - ``PrometheusScrapeEndpoint``: stdlib ThreadingHTTPServer answering
   ``GET /metrics`` with ``text/plain; version=0.0.4``.
-- ``PrometheusMetricsListener``: maps ``StreamingQueryProgress`` onto the
-  same metric names the reference dashboards read off Flink's reporter
-  (records in/out per second, latency, state size), labeled by query name.
+- ``PrometheusMetricsListener``: exports each ``progress_record``
+  (streaming/metrics.py) under the metric names the reference dashboards
+  read off Flink's reporter (records in/out per second, latency, state
+  size), labeled by query name.
 
 Scale note: the registry holds one entry per (metric, query) — O(queries),
 not O(events); a scrape renders kilobytes. Executors never touch this: all
@@ -28,9 +29,8 @@ from __future__ import annotations
 
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Any
 
-from pyspark.sql.streaming import StreamingQueryListener
+from .metrics import ProgressListener, progress_record
 
 _LABEL_ESCAPES = {"\\": "\\\\", '"': '\\"', "\n": "\\n"}
 
@@ -129,40 +129,26 @@ class PrometheusScrapeEndpoint:
         self._thread.join(timeout=5)
 
 
-class PrometheusMetricsListener(StreamingQueryListener):
-    """Bridges ``StreamingQueryProgress`` into the registry using the same
-    metric surface the reference scrapes from Flink's reporter
-    (records-in/out rates, latency, state size — SURVEY.md §2.7 O1):
-    gauges per query plus a monotone total-rows counter."""
+# (record field, metric name, type, help); every series is labeled by query
+_METRICS = (
+    ("input_rows_per_sec", "spark_streaming_input_rows_per_second", "gauge", "Source ingest rate (reference: flink records-in/s)"),
+    ("processed_rows_per_sec", "spark_streaming_processed_rows_per_second", "gauge", "Sink emit rate (reference: flink records-out/s)"),
+    ("batch_duration_ms", "spark_streaming_batch_duration_ms", "gauge", "Micro-batch latency (reference: flink latency metric)"),
+    ("state_rows", "spark_streaming_state_rows", "gauge", "Keyed rows over every stateful operator"),
+    ("state_bytes", "spark_streaming_state_bytes", "gauge", "Memory of every stateful operator (reference: managed memory)"),
+    ("num_input_rows", "spark_streaming_input_rows_total", "counter", "Cumulative input rows (counter)"),
+)
+
+
+class PrometheusMetricsListener(ProgressListener):
+    """Exports each ``progress_record`` as the metrics the reference scrapes
+    from Flink's reporter (SURVEY.md §2.7 O1), one ``_METRICS`` row each."""
 
     def __init__(self, registry: PrometheusRegistry) -> None:
         self.registry = registry
 
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
-
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        labels = {"query": p.name or str(p.id)}
-        g = self.registry.set_gauge
-        g("spark_streaming_input_rows_per_second", p.inputRowsPerSecond or 0.0,
-          labels, "Source ingest rate (reference: flink records-in/s)")
-        g("spark_streaming_processed_rows_per_second", p.processedRowsPerSecond or 0.0,
-          labels, "Sink emit rate (reference: flink records-out/s)")
-        g("spark_streaming_batch_duration_ms",
-          float(p.durationMs.get("triggerExecution", 0)), labels,
-          "Micro-batch latency (reference: flink latency metric)")
-        state = p.stateOperators[0] if p.stateOperators else None
-        g("spark_streaming_state_rows", float(state.numRowsTotal) if state else 0.0,
-          labels, "Stateful-operator keyed rows")
-        g("spark_streaming_state_bytes", float(state.memoryUsedBytes) if state else 0.0,
-          labels, "Stateful-operator memory (reference: managed memory)")
-        self.registry.inc_counter(
-            "spark_streaming_input_rows_total", float(p.numInputRows), labels,
-            "Cumulative input rows (counter)")
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
+        r = progress_record(event.progress)
+        for field, name, mtype, help_text in _METRICS:
+            put = self.registry.set_gauge if mtype == "gauge" else self.registry.inc_counter
+            put(name, float(r[field] or 0.0), {"query": r["query"]}, help_text)

@@ -55,9 +55,7 @@ import threading
 import time
 from typing import Any
 
-from pyspark.sql.streaming import StreamingQueryListener
-
-from .metrics import bytes_to_mb
+from .metrics import ProgressListener, progress_record
 
 # Fixed GUID every WebSocket handshake concatenates to the client key
 # (RFC 6455 §1.3).
@@ -818,33 +816,23 @@ def dashboard_path() -> str:
     return os.path.join(os.path.dirname(__file__), "static", "dashboard.html")
 
 
-class WebSocketMetricsPush(StreamingQueryListener):
-    """O2 push loop as a listener: each micro-batch's progress becomes one
-    JSON payload broadcast to every dashboard client — the same metric names
-    and unit conventions the reference pushes (rates in rows/s, latency in
-    ms, memory in MB; MetricsService.java:117-140 via :104)."""
+class WebSocketMetricsPush(ProgressListener):
+    """O2 push loop as a listener: each micro-batch's ``progress_record``
+    becomes one JSON payload broadcast to every dashboard client — the same
+    metric names and unit conventions the reference pushes (rates in rows/s,
+    latency in ms, memory in MB; MetricsService.java:117-140 via :104)."""
 
     def __init__(self, server: MetricsPushServer) -> None:
         self.server = server
 
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
-
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        state = p.stateOperators[0] if p.stateOperators else None
-        payload: dict[str, Any] = {
+        r = progress_record(event.progress)
+        payload = {
             "topic": "/topic/metrics",
-            "batch_id": p.batchId,
-            "input_rate_rows_per_sec": p.inputRowsPerSecond,
-            "output_rate_rows_per_sec": p.processedRowsPerSecond,
-            "latency_ms": p.durationMs.get("triggerExecution"),
-            "state_memory_mb": bytes_to_mb(state.memoryUsedBytes) if state else 0.0,
+            "batch_id": r["batch_id"],
+            "input_rate_rows_per_sec": r["input_rows_per_sec"],
+            "output_rate_rows_per_sec": r["processed_rows_per_sec"],
+            "latency_ms": r["batch_duration_ms"],
+            "state_memory_mb": r["state_memory_mb"],
         }
         self.server.broadcast(json.dumps(payload))
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass

@@ -64,6 +64,34 @@ def test_boundary_event_belongs_to_window_it_starts(spark):
     assert rows[epoch + 10000] == 1  # 10.000 -> [10, 20)
 
 
+def test_session_gap_tie_merges_in_spark_and_oracle(spark):
+    """Events exactly one gap (10 min) apart share a session; 1 ms more
+    splits them. Spark's session_window and the DuckDB gaps-and-islands
+    oracle must agree on both sides of the tie."""
+    import duckdb
+
+    from flink_stream_processing_spark.operators.window_metrics import session_windows
+    from flink_stream_processing_spark.queries_impl.windows_extra import _SESSION_ORACLE
+
+    epoch, gap = 1704067200000, 600000
+    events = [(1, epoch), (1, epoch + gap), (2, epoch), (2, epoch + gap + 1)]
+    expected = [
+        (1, epoch, epoch + 2 * gap, 2),
+        (2, epoch, epoch + gap, 1),
+        (2, epoch + gap + 1, epoch + 2 * gap + 1, 1),
+    ]
+    df = spark.createDataFrame(events, "user_id long, ms long").select(
+        "user_id", F.timestamp_millis("ms").alias("ts"))
+    got = sorted(tuple(r) for r in session_windows(df).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events (user_id BIGINT, ts TIMESTAMP)")
+    con.executemany("INSERT INTO events VALUES (?, make_timestamp(?))",
+                    [(u, ms * 1000) for u, ms in events])
+    oracle = sorted(tuple(int(v) for v in r) for r in con.execute(_SESSION_ORACLE).fetchall())
+    assert got == expected
+    assert oracle == expected
+
+
 def test_empty_input_no_windows(spark):
     df = _tx(spark, [])
     assert window_metrics(df).count() == 0

@@ -3,7 +3,7 @@
 shows multi-x intermittent stalls and a strong first-minute JIT effect, so
 single-shot wall timings cannot rank plan variants. This harness runs the
 named queries in R rotations inside ONE warm session, flipping an env-driven
-code variant per rotation (e.g. SPARK_GRAFT_NO_SPREAD), and reports the MIN
+code variant per rotation (e.g. SPARK_GRAFT_NO_LOCAL_CC), and reports the MIN
 per (query, variant) — the robust estimator under one-sided noise (same
 rationale as bench.py's retry-min policy).
 
