@@ -581,22 +581,12 @@ def simhash_near_dups(
     return pairs.filter(F.col("hamming") <= max_hamming)
 
 
-def _cc_local_max_edges() -> int:
-    """Symmetrized-edge bound under which :func:`connected_components`
-    uses the single-task numpy path. Sized by per-task memory, not by
-    this machine: 4M edges is ~64 MB of int64 index arrays in the one
-    task — the same order as a broadcast hash-join build side — while
-    corpus-scale near-dup graphs (billions of edges) stay far above it.
-    Overridable per deployment (``SPARK_GRAFT_CC_LOCAL_MAX_EDGES``);
-    ``SPARK_GRAFT_NO_LOCAL_CC`` disables the path for A/B measurement."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_LOCAL_CC"):
-        return -1
-    try:
-        return int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "4000000"))
-    except ValueError:
-        return 4_000_000
+# Symmetrized-edge bound under which connected_components uses the
+# single-task numpy path. Sized by per-task memory: 4M edges is ~64 MB of
+# int64 index arrays in one task (the order of a broadcast hash-join build
+# side), while corpus-scale near-dup graphs (billions of edges) stay far
+# above it.
+_CC_LOCAL_MAX_EDGES = 4_000_000
 
 
 def _cc_local_supported(staged: DataFrame) -> bool:
@@ -679,14 +669,15 @@ def connected_components(
     drop-the-larger-id would keep B out and C in; clustering keeps exactly
     one representative per transitive group.
 
-    Scale design: each round is one keyed join + one min-aggregate —
-    O(edges) shuffle rows — followed by a PATH-HALVING hop (lbl <- lbl of
-    lbl, one O(nodes) self-join), which turns convergence from O(diameter)
-    rounds into O(log diameter): a chain that plain propagation crosses one
-    hop per round collapses geometrically once labels start pointing at
-    labels. ``localCheckpoint`` after every round cuts the iterative
-    lineage (20 chained joins would otherwise blow plan compilation), and
-    the convergence check moves a single scalar count to the driver — the
+    Scale design of the distributed loop (:func:`_cc_loop`): each round
+    is one keyed join + one min-aggregate — O(edges) shuffle rows —
+    followed by a PATH-HALVING hop (lbl <- lbl of lbl, one O(nodes)
+    self-join), which turns convergence from O(diameter) rounds into
+    O(log diameter): a chain that plain propagation crosses one hop per
+    round collapses geometrically once labels start pointing at labels.
+    ``localCheckpoint`` after every round cuts the iterative lineage (20
+    chained joins would otherwise blow plan compilation), and the
+    convergence check moves a single scalar count to the driver — the
     data never leaves the executors. Loop partitioning is sized to the
     MATERIALIZED state volume (edge count / ~500k per partition) via
     EXPLICIT ``repartition(loop_parts, key)`` on the loop relations — no
@@ -702,31 +693,49 @@ def connected_components(
 
     SMALL-GRAPH FAST PATH (r20, guide §1.2 "the distributed algorithm"):
     once the symmetrized edge relation is materialized and counted, a
-    graph under ``SPARK_GRAFT_CC_LOCAL_MAX_EDGES`` symmetrized edges
-    (default 4M — tens of MB in one task, the same order as a broadcast
-    hash-join build side) is clustered in ONE executor task: a vectorized
-    numpy min-label propagation over the whole edge list inside
-    ``mapInPandas`` (see :func:`_cc_local`). The distributed loop pays
-    ~5 scheduled stages per round regardless of data volume; at bench
-    scale that fixed cost is the entire runtime (measured r20: 3.1 s loop
-    vs ~0.3 s local for the ER d1 graph, identical labels). The fixpoint
-    is the same exact min-label-by-value (integer/string min — no
-    floats), so results are bit-identical; the bound is data-derived (the
-    exact post-distinct edge count, never a plan estimate), and above it
-    — every corpus-scale graph — the distributed loop runs unchanged.
-    Kill switch ``SPARK_GRAFT_NO_LOCAL_CC`` for A/B measurement.
+    graph of at most ``_CC_LOCAL_MAX_EDGES`` (4M) symmetrized edges — tens
+    of MB in one task, the same order as a broadcast hash-join build side
+    — is clustered in ONE executor task: a vectorized numpy min-label
+    propagation over the whole edge list inside ``mapInPandas`` (see
+    :func:`_cc_local`). The distributed loop (:func:`_cc_loop`) pays ~5
+    scheduled stages per round regardless of data volume; at bench scale
+    that fixed cost is the entire runtime (measured r20: 3.1 s loop vs
+    ~0.3 s local for the ER d1 graph, identical labels). The fixpoint is
+    the same exact min-label-by-value (integer/string min — no floats), so
+    results are bit-identical; the choice reads only the input — the
+    exact post-distinct edge count (never a plan estimate) and the id
+    type (:func:`_cc_local_supported`) — and above the bound, every
+    corpus-scale graph takes the distributed loop.
+
+    Null ids: a pair with a null endpoint is dropped before staging, so
+    neither path sees it and no null node is ever emitted.
     """
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    staged = _cc_stage(pairs, id_a, id_b)
+    if staged.count() <= _CC_LOCAL_MAX_EDGES and _cc_local_supported(staged):
+        return _cc_local(staged)
+    return _cc_loop(staged, max_iter)
+
+
+def _cc_stage(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """The symmetrized, distinct (src, dst) edge relation both CC paths
+    run on, materialized once. Pairs with a null endpoint are dropped."""
+    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).dropna()
     # Materialize the symmetrized edge set ONCE: without this, every
     # propagation round's join re-executes the full upstream pair plan
     # (for LSH input, the whole signature+bucket pipeline) — the dominant
     # cost of the loop. After the checkpoint each round touches only the
     # O(edges) materialized relation.
-    staged = (
+    return (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
         .localCheckpoint(eager=True)
     )
+
+
+def _cc_loop(staged: DataFrame, max_iter: int) -> DataFrame:
+    """The distributed min-label propagation with path halving over the
+    staged edges (see :func:`connected_components`). Raises RuntimeError
+    when the labels have not converged after ``max_iter`` rounds."""
     spark = staged.sparkSession
     # Loop partition count: sized to the materialized edge volume, capped
     # at the session's configured parallelism. Applied ONLY through
@@ -738,8 +747,6 @@ def connected_components(
     except (TypeError, ValueError):  # e.g. "auto" on some platforms
         session_parts = spark.sparkContext.defaultParallelism
     n_edges = staged.count()  # scalar off the materialized relation
-    if n_edges <= _cc_local_max_edges() and _cc_local_supported(staged):
-        return _cc_local(staged)
     loop_parts = max(8, min(session_parts, n_edges // 500_000 + 1))
     # Re-stage hash-partitioned ON THE JOIN KEY: every propagation round's
     # join then sees its big side already distributed on `src` and only

@@ -22,21 +22,8 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint with a kill switch (mirrors the spread_fanout
-    A/B convention): SPARK_GRAFT_NO_CKPT=1 keeps the raw composition so
-    tests/measurements can inspect the un-truncated logical plan (the
-    checkpoint hides the subtree — e.g. the degree broadcast — from the
-    final explain)."""
-    if os.environ.get("SPARK_GRAFT_NO_CKPT"):
-        return df
-    return df.localCheckpoint(eager=True)
 
 
 def pagerank(
@@ -132,6 +119,35 @@ def pagerank(
     return ranks
 
 
+def _oriented_arcs(e: DataFrame) -> DataFrame:
+    """Degree-oriented arcs (a, b, rkb) of the canonical undirected edge
+    relation ``e`` (u < v, distinct): every edge points from its
+    lower-(degree, id) endpoint to the higher one, and ``rkb`` is the
+    rank of ``b``. The degree table is broadcast into the edge
+    relation."""
+    deg = (
+        e.select(F.col("u").alias("node"))
+        .unionAll(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    # Orient by (deg, id): arc a→b iff (deg_a, a) < (deg_b, b). Rank is
+    # encoded as a single BIGINT (deg in the high bits, id below) so the
+    # wedge join's ordering predicate is one integer compare, not a
+    # struct compare. Ids here are table keys (< 2^40); degrees < 2^23.
+    rank = (F.col("deg").cast("long") * F.lit(1 << 40) + F.col("node")).alias("rk")
+    degr = deg.select("node", rank)
+    return (
+        e.join(F.broadcast(degr).withColumnRenamed("node", "u").withColumnRenamed("rk", "rku"), "u")
+        .join(F.broadcast(degr).withColumnRenamed("node", "v").withColumnRenamed("rk", "rkv"), "v")
+        .select(
+            F.when(F.col("rku") < F.col("rkv"), F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(F.col("rku") < F.col("rkv"), F.col("v")).otherwise(F.col("u")).alias("b"),
+            F.when(F.col("rku") < F.col("rkv"), F.col("rkv")).otherwise(F.col("rku")).alias("rkb"),
+        )
+    )
+
+
 def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Per-node triangle counts over an undirected graph given as an edge
     list (either or both directions, self-loops and duplicates tolerated —
@@ -166,31 +182,10 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     # self-join + distinct) re-executes per consumer. O(edges) rows, same
     # checkpoint discipline as the CC/PageRank loops; rotated A/B at
     # sf0.1: 1.51 s -> 1.06 s with both checkpoints.
-    e = _ckpt(e)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    # Orient by (deg, id): arc a→b iff (deg_a, a) < (deg_b, b). Rank is
-    # encoded as a single BIGINT (deg in the high bits, id below) so the
-    # wedge join's ordering predicate is one integer compare, not a
-    # struct compare. Ids here are table keys (< 2^40); degrees < 2^23.
-    rank = (F.col("deg").cast("long") * F.lit(1 << 40) + F.col("node")).alias("rk")
-    degr = deg.select("node", rank)
-    arcs = (
-        e.join(F.broadcast(degr).withColumnRenamed("node", "u").withColumnRenamed("rk", "rku"), "u")
-        .join(F.broadcast(degr).withColumnRenamed("node", "v").withColumnRenamed("rk", "rkv"), "v")
-        .select(
-            F.when(F.col("rku") < F.col("rkv"), F.col("u")).otherwise(F.col("v")).alias("a"),
-            F.when(F.col("rku") < F.col("rkv"), F.col("v")).otherwise(F.col("u")).alias("b"),
-            F.when(F.col("rku") < F.col("rkv"), F.col("rkv")).otherwise(F.col("rku")).alias("rkb"),
-        )
-    )
+    e = e.localCheckpoint(eager=True)
     # r19: arcs feeds three consumers (both wedge sides + the closing
     # probe); materialized once for the same reason as e above.
-    arcs = _ckpt(arcs)
+    arcs = _oriented_arcs(e).localCheckpoint(eager=True)
     w1 = arcs.select(F.col("a"), F.col("b").alias("x"), F.col("rkb").alias("rkx"))
     w2 = arcs.select(F.col("a"), F.col("b").alias("y"), F.col("rkb").alias("rky"))
     wedges = w1.join(w2, "a").filter(F.col("rkx") < F.col("rky")).select("a", "x", "y")

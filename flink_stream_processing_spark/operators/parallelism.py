@@ -18,15 +18,23 @@ see are orders of magnitude past that bound, so the exchange never appears;
 where it does fire, it moves the narrow input relation once while the
 stages it parallelizes do O(fanout) hash/serde work per row — the trade
 that wins whenever it fires (and loses for plain tokenize/aggregate inputs,
-which is why call sites are curated per the r19 kill-switch A/Bs rather
-than blanket).
+which is why call sites are curated per the r19 A/B measurements rather
+than blanket). The gate reads only the input: its size estimate against
+the session's core count and scan split size, under a fixed 4 GiB cap.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
+
+# Absolute ceiling on the re-spread gate (r19 ADVICE, medium): the
+# per-core threshold ``cores x maxPartitionBytes`` grows unboundedly with
+# cluster width (2000 cores -> 256 GB), so on a big cluster a
+# CBO-underestimated corpus relation could be round-robin re-shuffled
+# wholesale. With the cap, a stats misestimate can at worst re-shuffle a
+# few GB — the same order a single join exchange moves anyway. 4 GiB is
+# the local[32] per-core bound, so bench behavior is unchanged.
+_SPREAD_CAP_BYTES = 4 << 30
 
 
 def _estimated_bytes(df: DataFrame):
@@ -41,30 +49,16 @@ def _estimated_bytes(df: DataFrame):
         return None
 
 
-def _spread_cap_bytes() -> int:
-    """Absolute ceiling on the re-spread gate (r19 ADVICE, medium): the
-    per-core threshold ``cores x maxPartitionBytes`` grows unboundedly
-    with cluster width (2000 cores -> 256 GB), so on a big cluster a
-    CBO-underestimated corpus relation could be round-robin re-shuffled
-    wholesale. Capping the threshold at an absolute few-GB bound means a
-    stats misestimate can at worst re-shuffle a few GB — the same order a
-    single join exchange moves anyway. Default 4 GiB (== the local[32]
-    per-core bound, so bench behavior is unchanged); override per
-    deployment via ``SPARK_GRAFT_SPREAD_MAX_BYTES``."""
-    try:
-        return int(os.environ.get("SPARK_GRAFT_SPREAD_MAX_BYTES", str(4 << 30)))
-    except ValueError:
-        return 4 << 30
-
-
-def is_fanout_narrow(df: DataFrame, target: int | None = None) -> bool:
-    """True when ``df``'s optimizer size estimate says its scan cannot
-    reach core-count parallelism (the :func:`spread_fanout` firing
-    condition): under one scan split per session core AND under the
-    absolute :func:`_spread_cap_bytes` ceiling. Callers use this both to
-    re-spread and as a small-regime signal (e.g. choosing a hash build
-    that would not fit at corpus scale). False when stats are missing —
-    at corpus scale, every default must be the scale-safe plan."""
+def spread_fanout(df: DataFrame, target: int | None = None) -> DataFrame:
+    """Round-robin ``df`` across the session's parallelism IF its estimated
+    size says its scan cannot reach core-count parallelism — under one
+    scan split per session core AND under the absolute
+    ``_SPREAD_CAP_BYTES`` ceiling — identity otherwise, and identity when
+    stats are missing (at corpus scale, every default must be the
+    scale-safe plan). Row-multiset preserved (round-robin repartition
+    re-buckets rows, never drops/dups them); only safe above
+    order-insensitive consumers, which every caller here is
+    (hash/count/min aggregates, per-row projections)."""
     spark = df.sparkSession
     goal = target or spark.sparkContext.defaultParallelism
     try:
@@ -75,17 +69,6 @@ def is_fanout_narrow(df: DataFrame, target: int | None = None) -> bool:
     except Exception:
         split_bytes = 128 * 1024 * 1024
     est = _estimated_bytes(df)
-    return est is not None and est < min(goal * split_bytes, _spread_cap_bytes())
-
-
-def spread_fanout(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin ``df`` across the session's parallelism IF its estimated
-    size is under one scan split per core (so its scan parallelism cannot
-    reach the core count) — identity otherwise. Row-multiset preserved
-    (round-robin repartition re-buckets rows, never drops/dups them); only
-    safe above order-insensitive consumers, which every caller here is
-    (hash/count/min aggregates, per-row projections)."""
-    if not is_fanout_narrow(df, target):
+    if est is None or est >= min(goal * split_bytes, _SPREAD_CAP_BYTES):
         return df
-    goal = target or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(goal)

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .parallelism import is_fanout_narrow, spread_fanout
+from .parallelism import spread_fanout
 
 # Word-boundary tokenizer shared by all text ops.
 TOKEN_SPLIT_RE = r"\s+"
@@ -197,9 +197,6 @@ def _fuzzy_pairs_d2(names: DataFrame, max_name_len: int) -> DataFrame:
     # every core (measured at sf0.1: three single-task 3-5 s explode
     # stages collapse to sub-second; no-op when the input is already wide).
     filtered = names.filter(F.col("name").isNotNull()).select(guarded.alias("name"))
-    # Small-regime signal reused below to pick the K2 self-join build
-    # (hash build only when the whole relation is provably small).
-    small_regime = is_fanout_narrow(filtered)
     base = spread_fanout(filtered).localCheckpoint(eager=True)
     # The four plain-key classes fold into ONE join: LEFT = K0 ∪ K1
     # (depths 0-1), RIGHT = K1 ∪ K2 (depths 1-2). Key-length equality
@@ -264,17 +261,14 @@ def _fuzzy_pairs_d2(names: DataFrame, max_name_len: int) -> DataFrame:
             F.greatest(left_name, right_name).alias("name_b"),
         ]
 
-    # r20 join strategies (guide §3.1, rotated A/B min-of-6 at sf0.1):
-    # the r19 "merge" hints forced sort-merge at every scale, paying a
-    # full sort of both exploded key relations per join. c_plain is now
-    # UNHINTED — AQE broadcasts the small L side from runtime sizes at
-    # bench scale and demotes to sort-merge at corpus scale (full+sort
-    # 2.94 s -> 2.52 s). The K2 self-join hash-builds one side
-    # (shuffle_hash, 2.52 -> 2.19 s) ONLY in the small regime certified
-    # by the same gate spread_fanout fires on (exact-stats checkpoint
-    # base under the capped per-core bound); at corpus scale the O(n·L²)
-    # build side could not fit a hash partition, so the hint falls back
-    # to sort-merge (the r19 ADVICE gating pattern).
+    # Join strategies (guide §3.1): both joins are UNHINTED. A "merge"
+    # hint forces sort-merge at every scale, paying a full sort of both
+    # exploded key relations per join (r20 A/B at sf0.1: 2.94 s -> 2.52 s
+    # without it); AQE broadcasts a small side from runtime sizes and
+    # demotes to sort-merge at corpus scale. No shuffle_hash hint either:
+    # a hinted hash build does not fall back by size, and the K2 build
+    # side is O(n·L²) rows, so no estimate of the base relation can
+    # certify that it fits a hash partition.
     left = k0.unionByName(k1u)
     right = k1u.unionByName(k2u)
     lft, rgt = left.alias("L"), right.alias("R")
@@ -282,8 +276,7 @@ def _fuzzy_pairs_d2(names: DataFrame, max_name_len: int) -> DataFrame:
         rgt,
         (F.col("L.kh") == F.col("R.kh")) & (F.col("L.name") != F.col("R.name")),
     ).select(*_pair(F.col("L.name"), F.col("R.name")))
-    k2_build = "shuffle_hash" if small_regime else "merge"
-    a2, b2 = k2.alias("a2"), k2.hint(k2_build).alias("b2")
+    a2, b2 = k2.alias("a2"), k2.alias("b2")
     c_two_subs = a2.join(
         b2,
         (F.col("a2.kh") == F.col("b2.kh"))

@@ -26,11 +26,12 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) —
     on a cluster, leave it unset and submit with ``--master``.
+    ``shuffle_partitions`` defaults to the same core count.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+        shuffle_partitions = int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -57,7 +57,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.risk import format_risk_lines, label_risk
-from ..operators.window_metrics import metric_agg_exprs
+from ..operators.window_metrics import session_windows, window_metrics
 
 # events parquet read as a stream. The driver has generated ts as
 # TIMESTAMP(NANOS) in some rounds (arrives as an epoch-nanos long under
@@ -113,26 +113,11 @@ def streaming_window_metrics(
     watermark: str = "5 seconds",
     window_duration: str = "10 seconds",
 ) -> DataFrame:
-    """Streaming form of the flagship aggregate (A1-A5 + W1/W2). Append mode
-    emits each window once its end passes the watermark; late rows are
-    dropped (W4)."""
-    w = F.window(F.col("ts"), window_duration)
-    return (
-        tx.withWatermark("ts", watermark)
-        .groupBy(w.alias("w"))
-        .agg(*metric_agg_exprs())
-        .select(
-            F.unix_millis(F.col("w.start")).alias("window_start"),
-            F.unix_millis(F.col("w.end")).alias("window_end"),
-            "cnt",
-            "success_count",
-            "failure_count",
-            "avg_amount",
-            "avg_exchange_rate",
-            "min_amount",
-            "max_amount",
-        )
-    )
+    """Streaming form of the flagship aggregate (A1-A5 + W1/W2): the batch
+    :func:`window_metrics` over the watermarked stream. Append mode emits
+    each window once its end passes the watermark; late rows are dropped
+    (W4)."""
+    return window_metrics(tx.withWatermark("ts", watermark), window_duration)
 
 
 def streaming_session_windows(
@@ -141,24 +126,13 @@ def streaming_session_windows(
     key: str = "user_id",
     watermark: str = "5 seconds",
 ) -> DataFrame:
-    """Streaming per-key session windows (stateful session MERGING, not just
-    pane accumulation): Spark keeps per-key open-session state, merges
-    sessions when a new event bridges two, and the watermark bounds how long
-    a session can stay open for late events. Output shape matches the batch
-    ``session_windows`` operator so the same gaps-and-islands oracle gates
-    both paths."""
-    sw = F.session_window(F.col("ts"), gap)
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.col(key), sw.alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key,
-            F.unix_millis(F.col("w.start")).alias("session_start"),
-            F.unix_millis(F.col("w.end")).alias("session_end"),
-            "n_events",
-        )
-    )
+    """Streaming per-key session windows: the batch :func:`session_windows`
+    over the watermarked stream. Spark keeps per-key open-session state,
+    merges sessions when a new event bridges two, and the watermark bounds
+    how long a session can stay open for late events. The output is the
+    batch operator's, so the same gaps-and-islands oracle gates both
+    paths."""
+    return session_windows(events.withWatermark("ts", watermark), gap, key)
 
 
 def risk_stream(tx: DataFrame, threshold: float = 1000.0) -> DataFrame:

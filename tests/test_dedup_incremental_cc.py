@@ -10,6 +10,9 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from flink_stream_processing_spark.operators.dedup import (
+    _cc_local,
+    _cc_loop,
+    _cc_stage,
     cc_incremental,
     connected_components,
 )
@@ -127,60 +130,57 @@ def test_cc_incremental_equals_union_find_model(spark_global, e1, e2):
     assert _rowset(inc) == _uf_partition(e1 + e2)
 
 
+def _both_paths(pairs):
+    """(node, lbl) rowsets of the single-task numpy path and of the
+    distributed loop, each run directly on the same staged edges."""
+    staged = _cc_stage(pairs, "doc_a", "doc_b")
+    return _rowset(_cc_local(staged)), _rowset(_cc_loop(staged, 20))
+
+
 def test_cc_local_fast_path_matches_distributed_loop(spark):
     """r20: small graphs take the single-task numpy path; its (node, lbl)
     output must be bit-identical to the distributed propagation loop on
-    the same edges — longs AND strings — and the gate must respect the
-    kill switch / edge-count bound env overrides."""
-    import os
-
+    the same edges — longs AND strings."""
     rows = [
         (1, 2), (2, 3), (3, 1),          # triangle
         (10, 11), (11, 12),              # chain
         (5, 5),                          # self loop
         (100, 7), (7, 100),              # both directions + dup
     ]
-    pairs = _pairs(spark, rows)
-
-    def run(**env):
-        saved = {k: os.environ.get(k) for k in env}
-        try:
-            for k, v in env.items():
-                if v is None:
-                    os.environ.pop(k, None)
-                else:
-                    os.environ[k] = v
-            return _rowset(connected_components(pairs))
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    os.environ.pop(k, None)
-                else:
-                    os.environ[k] = v
-
-    local = run(SPARK_GRAFT_NO_LOCAL_CC=None)
-    dist = run(SPARK_GRAFT_NO_LOCAL_CC="1")
+    local, dist = _both_paths(_pairs(spark, rows))
     assert local == dist
-    # bound of 0 edges forces the distributed loop too
-    tiny_bound = run(SPARK_GRAFT_CC_LOCAL_MAX_EDGES="0")
-    assert tiny_bound == dist
+    assert local == _uf_partition(rows)
 
     # string node ids (entity-resolution shape): same equivalence
     srows = [("b", "c"), ("c", "d"), ("x", "y")]
     spairs = spark.createDataFrame(srows, "doc_a string, doc_b string")
-    sl = sorted(
-        (r["node"], r["lbl"]) for r in connected_components(spairs).collect()
-    )
-    saved = os.environ.get("SPARK_GRAFT_NO_LOCAL_CC")
-    os.environ["SPARK_GRAFT_NO_LOCAL_CC"] = "1"
-    try:
-        sd = sorted(
-            (r["node"], r["lbl"]) for r in connected_components(spairs).collect()
-        )
-    finally:
-        if saved is None:
-            os.environ.pop("SPARK_GRAFT_NO_LOCAL_CC", None)
-        else:
-            os.environ["SPARK_GRAFT_NO_LOCAL_CC"] = saved
+    sl, sd = _both_paths(spairs)
     assert sl == sd
     assert sl == [("b", "b"), ("c", "b"), ("d", "b"), ("x", "x"), ("y", "x")]
+
+
+def test_cc_drops_pairs_with_a_null_endpoint(spark):
+    """A pair with a null id names no edge: both paths drop it at staging,
+    emit no null node, and agree — on long and string ids."""
+    lrows = [(1, 2), (2, None), (None, 3), (None, None), (4, 5)]
+    lpairs = spark.createDataFrame(lrows, "doc_a long, doc_b long")
+    want = [(1, 1), (2, 1), (4, 4), (5, 4)]
+    assert _both_paths(lpairs) == (want, want)
+
+    srows = [("a", "b"), ("b", None), (None, "c"), ("d", "e")]
+    spairs = spark.createDataFrame(srows, "doc_a string, doc_b string")
+    want = [("a", "a"), ("b", "a"), ("d", "d"), ("e", "d")]
+    assert _both_paths(spairs) == (want, want)
+    assert _rowset(connected_components(spairs)) == want
+
+
+def test_cc_loop_raises_when_max_iter_is_too_small(spark):
+    """A partial labeling looks like a final one, so the distributed loop
+    must fail loudly when it runs out of rounds: a 64-node chain needs
+    several path-halving rounds, and max_iter=1 is not enough."""
+    import pytest
+
+    chain = _pairs(spark, [(i, i + 1) for i in range(63)])
+    staged = _cc_stage(chain, "doc_a", "doc_b")
+    with pytest.raises(RuntimeError, match="did not converge within max_iter=1"):
+        _cc_loop(staged, 1)

@@ -265,6 +265,24 @@ def test_fuzzy_name_pairs_plan_has_no_broadcast_joins(spark):
         assert "BroadcastHashJoin" not in plan, f"max_dist={d}"
 
 
+def test_fuzzy_name_pairs_d2_plan_has_no_shuffled_hash_join(spark):
+    """The K2 self-join's build side is O(n·L²) rows. A hinted hash build
+    does not fall back by size, so no estimate of the base relation can
+    certify it fits: the radius-2 plan must carry no ShuffledHashJoin,
+    even on an input whose size estimate is tiny (a VALUES relation has
+    exact stats; a createDataFrame relation has none)."""
+    from flink_stream_processing_spark.operators.text import fuzzy_name_pairs
+
+    df = spark.sql("SELECT * FROM VALUES ('abc'), ('abd') AS t(name)")
+    plan = (
+        fuzzy_name_pairs(df, "name", max_dist=2)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "ShuffledHashJoin" not in plan, plan
+
+
 def test_fuzzy_name_pairs_d1_matches_brute_force(spark):
     """Radius-1 edit-class joins vs brute-force Levenshtein on the same
     class-covering vocabulary as the d2 test."""

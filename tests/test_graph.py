@@ -110,17 +110,16 @@ def test_iterative_loops_leave_session_conf_untouched(spark):
     """Round-5 verdict ask #3: the CC/PageRank loops used to swap
     session-global ``spark.sql.shuffle.partitions`` for their iterations,
     silently re-planning any concurrent query on the shared session. Run
-    connected_components on a long chain (many propagation rounds) in a
-    background thread while the foreground polls the conf and runs its own
-    aggregate — the conf must never move."""
+    the distributed CC loop (``_cc_loop``; ``connected_components`` sends
+    a graph this small to the single-task path) on a long chain (many
+    propagation rounds) in a background thread while the foreground polls
+    the conf and runs its own aggregate — the conf must never move."""
     import threading
     import time
 
     from pyspark.sql import functions as F
 
-    from flink_stream_processing_spark.operators.dedup import (
-        connected_components,
-    )
+    from flink_stream_processing_spark.operators.dedup import _cc_loop, _cc_stage
 
     sp_key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(sp_key)
@@ -134,7 +133,8 @@ def test_iterative_loops_leave_session_conf_untouched(spark):
 
     def run_cc():
         result["labels"] = {
-            r["node"]: r["lbl"] for r in connected_components(pairs).collect()
+            r["node"]: r["lbl"]
+            for r in _cc_loop(_cc_stage(pairs, "doc_a", "doc_b"), 20).collect()
         }
 
     t = threading.Thread(target=run_cc)

@@ -209,25 +209,35 @@ def test_salted_join_pins_shuffle_hash_and_no_cartesian(spark):
     assert "Cartesian" not in plan, plan
 
 
-def test_triangle_count_broadcasts_degrees_no_cartesian(spark, monkeypatch):
+def test_triangle_count_broadcasts_degrees_no_cartesian(spark):
     """Triangle counting: the O(nodes) degree/rank relation joins in as a
     broadcast; wedge + closing joins are keyed (never cartesian).
 
     r19: the shipped form localCheckpoints the edge and arc relations (they
     feed 3 consumers each), which truncates the final plan — the degree
-    broadcast now lives inside the checkpointed arc build. The broadcast
-    property is asserted on the raw composition via the SPARK_GRAFT_NO_CKPT
-    kill switch; the shipped (checkpointed) plan keeps the no-cartesian
-    assertion."""
+    broadcast lives inside the checkpointed arc build. The broadcast
+    property is asserted on that arc build itself (``_oriented_arcs``,
+    un-checkpointed); the shipped (checkpointed) plan keeps the
+    no-cartesian assertion."""
+    from pyspark.sql import functions as F
+
+    from flink_stream_processing_spark.operators.graph import _oriented_arcs
+    from flink_stream_processing_spark.plans import formatted_plan
+
     df = QUERIES["triangle_count_cosuppliers"](spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Cartesian" not in plan, plan
 
-    monkeypatch.setenv("SPARK_GRAFT_NO_CKPT", "1")
-    raw = QUERIES["triangle_count_cosuppliers"](spark, SF_DIR)
-    raw_plan = raw._jdf.queryExecution().executedPlan().toString()
-    assert "Cartesian" not in raw_plan, raw_plan
-    assert has_broadcast_join(raw)
+    # canonical (u < v, distinct) edges with no join of their own, so the
+    # only joins in the arc plan are the two degree lookups
+    e = spark.range(200).select(
+        F.col("id").alias("u"), (F.col("id") + 1 + F.col("id") % 3).alias("v")
+    )
+    arcs = _oriented_arcs(e)
+    arc_plan = formatted_plan(arcs)
+    assert "Cartesian" not in arc_plan, arc_plan
+    assert has_broadcast_join(arcs)
+    assert "SortMergeJoin" not in arc_plan and "ShuffledHashJoin" not in arc_plan, arc_plan
 
 
 def test_mmr_prefilter_broadcasts_queries(spark):
