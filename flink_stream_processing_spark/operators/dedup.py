@@ -7,10 +7,15 @@ Scale design (100 TB):
   (key_hash, id); at scale group by md5 fingerprint, never the raw text.
 - Exact all-pairs Jaccard is O(n²) and only exists as the small-scale oracle
   / verification path. The scale path is MinHash+LSH: per-doc signature
-  (narrow, one pass), band buckets, and a shuffle that only carries
+  (a narrow ``mapInArrow`` pass of numpy over Arrow batches), band hashes
+  (a narrow projection), and a shuffle that only carries
   (band_hash -> doc_id) pairs; candidate pairs are then verified with exact
   Jaccard on the (tiny) candidate set. This is the standard
-  shingle->minhash->band->bucket-join construction.
+  shingle->minhash->band->bucket-join construction. The numpy pass
+  computes Spark's own xxhash64 (``hashLong``/``hashInt`` in wrapping
+  uint64 arithmetic), so signatures, and the band hashes of them, equal
+  those of the ``F.xxhash64`` expression form bit for bit and persisted
+  band stores stay valid.
 - LSH operating point: bands/rows are tuned to the verify threshold. With
   ``num_perm`` perms in ``b`` bands of ``r`` rows the S-curve midpoint is
   (1/b)^(1/r); candidate-inclusion probability for a pair at Jaccard j is
@@ -32,10 +37,13 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .parallelism import spread_fanout
+from .parallelism import gather_for_python, spread_fanout
 from .text import TOKEN_SPLIT_RE
 
 
@@ -106,35 +114,139 @@ def jaccard_pairs(shingles: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
+# Spark's xxhash64 (org.apache.spark.sql.catalyst.expressions.XXH64) on
+# numpy uint64 arrays. Array arithmetic wraps modulo 2**64 exactly as JVM
+# longs do, so these reproduce Spark's hashes bit for bit (the tests check
+# them against F.xxhash64 on edge values). Every product that can overflow
+# runs on an array: numpy warns when two uint64 scalars overflow.
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5_4 = np.uint64(0x27D4EB2F165667C5 + 4)
+_P5_8 = np.uint64(0x27D4EB2F165667C5 + 8)
+# Spark's default xxhash64 seed: xxhash64(a, b, ...) folds
+# hash = hashX(col, hash) from this value, skipping null columns.
+_XXH_SEED = 42
+
+
+def _rotl(h: np.ndarray, r: int, tmp: np.ndarray) -> None:
+    """Rotate ``h`` left by ``r`` bits in place; ``tmp`` is a work buffer."""
+    np.left_shift(h, np.uint64(r), out=tmp)
+    h >>= np.uint64(64 - r)
+    h |= tmp
+
+
+def _fmix(h: np.ndarray, tmp: np.ndarray) -> np.ndarray:
+    """XXH64's final avalanche, in place; ``tmp`` is a work buffer."""
+    for shift, prime in ((33, _P2), (29, _P3)):
+        np.right_shift(h, np.uint64(shift), out=tmp)
+        h ^= tmp
+        h *= prime
+    np.right_shift(h, np.uint64(32), out=tmp)
+    h ^= tmp
+    return h
+
+
+def _xxh64_long(v: np.ndarray, seed) -> np.ndarray:
+    """``XXH64.hashLong(v, seed)``: the xxhash64 of one long column value
+    ``v`` (uint64 view of the long) under ``seed`` (uint64 array or int)."""
+    k = v * _P2
+    tmp = np.empty_like(k)
+    _rotl(k, 31, tmp)
+    k *= _P1
+    h = np.asarray(seed, dtype=np.uint64) + _P5_8
+    h = h ^ k  # not in place: ``seed`` may be a scalar
+    _rotl(h, 27, tmp)
+    h *= _P1
+    h += _P4
+    return _fmix(h, tmp)
+
+
+def _xxh64_int(v: np.ndarray, seed, out=None, tmp=None) -> np.ndarray:
+    """``XXH64.hashInt(v, seed)``: the xxhash64 of one int column value
+    ``v`` (uint64 array holding the int's low 32 bits) under ``seed``
+    (uint64 array or int). ``out`` and ``tmp``, buffers shaped like the
+    result, let a loop reuse its memory instead of faulting in fresh
+    pages on every call."""
+    h = np.add(np.asarray(seed, dtype=np.uint64), _P5_4, out=out)
+    h ^= (v & np.uint64(0xFFFFFFFF)) * _P1
+    tmp = np.empty_like(h) if tmp is None else tmp
+    _rotl(h, 23, tmp)
+    h *= _P2
+    h += _P3
+    return _fmix(h, tmp)
+
+
+def _minhash_batches(batches, id_col: str, num_perm: int):
+    """The MinHash pass over Arrow batches of (id, hs): per shingle prehash
+    ``hashLong(h, 42)`` once, then per permutation ``i`` the signed min
+    over each row's list of ``hashInt(i, ·)`` of it, which is
+    ``min(xxhash64(h, i))``. An empty list gives Long.MAX_VALUE (the
+    fold's initial value) and a null list a null signature."""
+    perms = np.arange(num_perm, dtype=np.uint64)
+    names = [id_col, *(f"mh{i}" for i in range(num_perm))]
+    for batch in batches:
+        hs = batch.column(1)
+        offsets = hs.offsets.to_numpy()
+        base = offsets[0]
+        filled = np.diff(offsets) > 0
+        starts = offsets[:-1][filled] - base
+        pre = _xxh64_long(
+            hs.values.to_numpy()[base : offsets[-1]].view(np.uint64), _XXH_SEED
+        )
+        nulls = hs.is_null().to_numpy(zero_copy_only=False) if hs.null_count else None
+        perm_h, tmp = np.empty_like(pre), np.empty_like(pre)
+        cols = [batch.column(0)]
+        for i in range(num_perm):
+            mh = np.full(len(hs), np.iinfo(np.int64).max, dtype=np.int64)
+            if len(starts):
+                _xxh64_int(perms[i : i + 1], pre, perm_h, tmp)
+                mh[filled] = np.minimum.reduceat(perm_h.view(np.int64), starts)
+            cols.append(pa.array(mh, mask=nulls))
+        yield pa.RecordBatch.from_arrays(cols, names=names)
+
+
 def minhash_signatures(
     with_shingle_arr: DataFrame, id_col: str = "doc_id", num_perm: int = 32
 ) -> DataFrame:
-    """Per-doc MinHash signature: each shingle STRING is hashed exactly once
-    (xxhash64), then permutation i is min(xxhash64(h, i)) folded over the
-    per-row array of those 64-bit prehashes — a pure narrow projection with
-    ZERO shuffle (duplicates in the array can't change a min). At 100 TB
-    this is the difference between shuffling O(docs*shingles) rows and
-    shuffling nothing.
+    """Per-doc MinHash signature (id, mh0 .. mh{num_perm-1}), all longs.
+    Permutation ``i`` is the min over the doc's shingles ``s`` of
+    ``xxhash64(xxhash64(s), i)``, compared as signed longs; duplicates in
+    the array cannot change a min. An empty array gives Long.MAX_VALUE in
+    every column, a null array nulls.
 
-    The prehash matters for CPU, not just elegance: the naive form hashes
-    the full shingle string num_perm times, so per-shingle cost is
-    O(num_perm * bytes); rehashing the fixed 8-byte prehash makes it
-    O(bytes + num_perm) — measured ~1.5x on sf0.1 signatures, and the gap
-    grows with shingle length. Seeding by re-hashing a high-entropy 64-bit
-    value gives an equally independent permutation family (recall gates in
-    tests/test_recall*.py re-certify the operating point)."""
-    max_long = F.lit(0x7FFFFFFFFFFFFFFF).cast("long")
-    prehash = F.transform(F.col("sh_arr"), lambda s: F.xxhash64(s))
+    Two narrow passes, no shuffle. Spark hashes each shingle STRING once
+    (``transform(sh_arr, s -> xxhash64(s))``), so UTF-8 hashing stays in
+    the JVM. One ``mapInArrow`` pass then computes the permutations in
+    numpy over each Arrow batch: Spark's ``xxhash64(h, lit(i))`` is
+    ``XXH64.hashInt(i, XXH64.hashLong(h, 42))``, so the pass takes
+    ``hashLong(h, 42)`` once per shingle, ``hashInt(i, ·)`` of it per
+    permutation in wrapping uint64 arithmetic, and the per-row min with
+    ``np.minimum.reduceat`` over the list offsets. The signatures are bit
+    for bit those of the Spark-expression fold
+    ``aggregate(hs, Long.MAX_VALUE, (acc, h) -> least(acc, xxhash64(h, i)))``,
+    which evaluates 32 interpreted lambdas per shingle and pays their
+    analysis on every call; a test keeps that fold as the oracle.
 
-    def min_hash(i: int):
-        return lambda acc, h: F.least(acc, F.xxhash64(h, F.lit(i)))
+    Rehashing the fixed 8-byte prehash makes per-shingle cost
+    O(bytes + num_perm) instead of O(num_perm * bytes). Seeding by
+    re-hashing a high-entropy 64-bit value gives an equally independent
+    permutation family (recall gates in tests/test_recall*.py re-certify
+    the operating point).
 
-    sig_cols = [
-        F.aggregate(F.col("hs"), max_long, min_hash(i)).alias(f"mh{i}")
-        for i in range(num_perm)
-    ]
-    return with_shingle_arr.select(id_col, prehash.alias("hs")).select(
-        id_col, *sig_cols
+    A small input is first coalesced to fewer partitions
+    (``gather_for_python``): each Python task pays a fixed worker round
+    trip, which would outweigh the hashing of a partition of a few rows."""
+    hs = gather_for_python(with_shingle_arr).select(
+        id_col, F.transform(F.col("sh_arr"), lambda s: F.xxhash64(s)).alias("hs")
+    )
+    out = T.StructType(
+        [hs.schema[id_col]]
+        + [T.StructField(f"mh{i}", T.LongType()) for i in range(num_perm)]
+    )
+    return hs.mapInArrow(
+        lambda batches: _minhash_batches(batches, id_col, num_perm), out
     )
 
 
@@ -144,9 +256,19 @@ def band_hashes(
     num_perm: int = 32,
     bands: int = 16,
 ) -> DataFrame:
-    """Stacked (id, band_id, band_hash) rows — the LSH bucket table. This is
-    also the persistable *signature store* schema for incremental dedup:
-    O(docs*bands) narrow rows, independent of text size.
+    """Stacked (id, band_id, band_hash) rows, doc-major — the LSH bucket
+    table. This is also the persistable *signature store* schema for
+    incremental dedup: O(docs*bands) narrow rows, independent of text size.
+
+    Band ``b`` hashes its ``rows = num_perm // bands`` signature columns
+    with ``xxhash64(mh_{b*rows}, .., mh_{b*rows+rows-1})`` (Spark's seed-42
+    ``hashLong`` fold, which skips nulls), and one ``posexplode`` of the
+    array of band hashes stacks them, its position being the band id. The
+    projection is cheap to analyze (one generator, no struct per band) and
+    runs in generated JVM code; an Arrow pass would pay a Python worker
+    round trip per task for hashing that takes microseconds. Rows, order
+    and schema are those of the per-band struct ``explode`` form, kept as
+    the test oracle, so persisted stores stay valid.
 
     ``bands`` must divide ``num_perm`` exactly: bands > num_perm would give
     zero rows per band (a CONSTANT band hash putting the whole corpus in
@@ -161,22 +283,10 @@ def band_hashes(
             f"LSH operating point"
         )
     rows = num_perm // bands
-    band_cols = [
-        F.xxhash64(*[F.col(f"mh{b * rows + r}") for r in range(rows)]).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = signatures.select(id_col, *band_cols)
-    return banded.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_id"), F.col(f"band{b}").alias("band_hash"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band_id", "bb.band_hash")
+    band_hash = F.array(
+        *[F.xxhash64(*[F.col(f"mh{b * rows + r}") for r in range(rows)]) for b in range(bands)]
+    )
+    return signatures.select(id_col, F.posexplode(band_hash).alias("band_id", "band_hash"))
 
 
 # Pairs within one bucket, generated INSIDE the collected array (ids only).
@@ -594,8 +704,6 @@ def _cc_local_supported(staged: DataFrame) -> bool:
     under numpy/pandas semantics: exact for integers, and for strings
     (UTF-8 byte order equals code-point order, which is Python str
     order). Exotic id types fall back to the distributed loop."""
-    from pyspark.sql import types as T
-
     return isinstance(
         staged.schema["src"].dataType,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType),
@@ -719,17 +827,25 @@ def connected_components(
 def _cc_stage(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     """The symmetrized, distinct (src, dst) edge relation both CC paths
     run on, materialized once. Pairs with a null endpoint are dropped."""
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).dropna()
     # Materialize the symmetrized edge set ONCE: without this, every
     # propagation round's join re-executes the full upstream pair plan
     # (for LSH input, the whole signature+bucket pipeline) — the dominant
     # cost of the loop. After the checkpoint each round touches only the
     # O(edges) materialized relation.
-    return (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    return _cc_edges(pairs, id_a, id_b).localCheckpoint(eager=True)
+
+
+def _cc_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Both orientations of every non-null pair, distinct. One explode
+    emits (a, b) and (b, a) from each pair row, so the upstream pair plan
+    runs once; a union of the pairs with their swap would run it once per
+    branch."""
+    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).dropna()
+    both = F.array(
+        F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
+        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
     )
+    return e.select(F.explode(both).alias("e")).select("e.src", "e.dst").distinct()
 
 
 def _cc_loop(staged: DataFrame, max_iter: int) -> DataFrame:

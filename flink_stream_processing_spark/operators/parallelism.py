@@ -21,6 +21,10 @@ that wins whenever it fires (and loses for plain tokenize/aggregate inputs,
 which is why call sites are curated per the r19 A/B measurements rather
 than blanket). The gate reads only the input: its size estimate against
 the session's core count and scan split size, under a fixed 4 GiB cap.
+
+``gather_for_python`` is the converse for stages that run in Python
+workers: there a task costs a fixed worker round trip, so a small input
+is coalesced to fewer partitions, by the same size estimate.
 """
 
 from __future__ import annotations
@@ -35,6 +39,14 @@ from pyspark.sql import DataFrame
 # few GB — the same order a single join exchange moves anyway. 4 GiB is
 # the local[32] per-core bound, so bench behavior is unchanged.
 _SPREAD_CAP_BYTES = 4 << 30
+
+# Least input a Python-worker task should carry. PySpark 4.1's worker
+# re-reads the index of its zipped package on every task (worker_util
+# ``setup_spark_files`` calls ``importlib.invalidate_caches()``), about
+# 0.24 s of CPU per task even for an empty partition (4-vCPU VM, two
+# cores). The MinHash pass hashes about 2M shingles/s per task there, so
+# 16 MB of shingle arrays (about 1M shingles) is about twice that cost.
+_PY_TASK_MIN_BYTES = 16 << 20
 
 
 def _estimated_bytes(df: DataFrame):
@@ -72,3 +84,22 @@ def spread_fanout(df: DataFrame, target: int | None = None) -> DataFrame:
     if est is None or est >= min(goal * split_bytes, _SPREAD_CAP_BYTES):
         return df
     return df.repartition(goal)
+
+
+def gather_for_python(df: DataFrame) -> DataFrame:
+    """Coalesce ``df`` to one partition per ``_PY_TASK_MIN_BYTES`` of its
+    estimated size when that is fewer partitions than the session's
+    parallelism; identity otherwise, and identity when stats are missing.
+
+    For inputs of a stage that runs in Python workers (``mapInArrow``):
+    every such task pays a fixed worker round trip whatever its row
+    count, so a small relation spread across every core (``spread_fanout``)
+    spends more on those round trips than on its rows. Coalescing is
+    narrow (no exchange) and keeps row order."""
+    est = _estimated_bytes(df)
+    if est is None:
+        return df
+    n = max(1, -(-est // _PY_TASK_MIN_BYTES))
+    if n >= df.sparkSession.sparkContext.defaultParallelism:
+        return df
+    return df.coalesce(n)

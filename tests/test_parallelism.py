@@ -1,4 +1,5 @@
-"""Focused tests for operators.parallelism.spread_fanout (r19 internals).
+"""Focused tests for operators.parallelism.spread_fanout (r19 internals)
+and its converse gather_for_python.
 
 The r19 optimization round re-spreads narrow fanout-heavy inputs across the
 session's cores; the gate is the optimizer's logical-plan size estimate (the
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_processing_spark.operators.parallelism import (
     _estimated_bytes,
+    gather_for_python,
     spread_fanout,
 )
 
@@ -76,3 +78,19 @@ def test_spread_explicit_target(spark):
     df = spark.range(100)
     out = spread_fanout(df, target=5)
     assert "Repartition" in _optimized_plan(out)
+
+
+def test_gather_coalesces_a_small_spread_relation_in_order(spark):
+    """A relation far under one Python task's worth of input runs as one
+    partition; coalescing is narrow, so rows keep their collect order."""
+    df = spark.range(0, 4_000, 1, 8).select(F.col("id"), F.sha1(F.col("id").cast("string")))
+    assert _estimated_bytes(df) < 1 << 20
+    out = gather_for_python(df)
+    assert out.rdd.getNumPartitions() == 1
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    assert out.collect() == df.collect()
+
+
+def test_gather_identity_without_statistics(spark):
+    sdf = spark.readStream.format("rate").load()
+    assert gather_for_python(sdf) is sdf

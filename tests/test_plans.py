@@ -240,6 +240,31 @@ def test_triangle_count_broadcasts_degrees_no_cartesian(spark):
     assert "SortMergeJoin" not in arc_plan and "ShuffledHashJoin" not in arc_plan, arc_plan
 
 
+def test_cc_edges_run_the_pair_plan_once(spark):
+    """Connected components stages both orientations of each pair with one
+    explode, so the upstream pair plan appears once in the staged plan: no
+    Union, one scan of the pair source. The edge set is the symmetric
+    closure of the non-null pairs."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from flink_stream_processing_spark.operators.dedup import _cc_edges
+    from flink_stream_processing_spark.plans import formatted_plan
+
+    pairs = spark.range(40).select(
+        F.col("id").alias("doc_a"),
+        F.when(F.col("id") % 7 != 0, F.col("id") % 9).alias("doc_b"),
+    )
+    edges = _cc_edges(pairs, "doc_a", "doc_b")
+    plan = formatted_plan(edges)
+    assert "Union" not in plan, plan
+    assert len(re.findall(r"^\(\d+\) Range", plan, re.M)) == 1, plan
+    want = {(a, a % 9) for a in range(40) if a % 7}
+    want |= {(b, a) for a, b in want}
+    assert {(r["src"], r["dst"]) for r in edges.collect()} == want
+
+
 def test_mmr_prefilter_broadcasts_queries(spark):
     """MMR's candidate prefilter must broadcast the query batch (corpus
     never reshuffles for scoring)."""

@@ -1102,7 +1102,7 @@ def test_fuzzy_d2_planted_pairs_recovered_45k(spark):
 
 
 def test_connected_components_long_chain_converges_logarithmically(spark):
-    """Direct stress of the path-halving claim in connected_components:
+    """Direct stress of the path-halving claim in the distributed CC loop:
     a planted PATH of 5 000 × REPLICAS nodes (diameter ~50k at the
     default) collapses to ONE component labeled by its minimum node —
     within the default max_iter=20. Plain min-label propagation crosses
@@ -1110,8 +1110,9 @@ def test_connected_components_long_chain_converges_logarithmically(spark):
     inside 20 is only possible if the halving hop really turns
     convergence into O(log diameter) (log₂ 50 000 ≈ 15.6). Volume bulk:
     disjoint planted pairs that must each keep their own min label —
-    the chain must not absorb them."""
-    from flink_stream_processing_spark.operators.dedup import connected_components
+    the chain must not absorb them. The loop is called directly:
+    ``connected_components`` clusters a graph this small in one task."""
+    from flink_stream_processing_spark.operators.dedup import _cc_loop, _cc_stage
 
     n_chain = 5_000 * REPLICAS
     chain = spark.range(n_chain - 1).select(
@@ -1125,8 +1126,8 @@ def test_connected_components_long_chain_converges_logarithmically(spark):
     )
     comp = _timed(
         f"connected_components: {n_chain}-node chain + {n_pairs} pairs",
-        lambda: connected_components(
-            chain.unionByName(bulk)
+        lambda: _cc_loop(
+            _cc_stage(chain.unionByName(bulk), "doc_a", "doc_b"), max_iter=20
         ).localCheckpoint(eager=True),
     )
     assert comp.count() == n_chain + 2 * n_pairs
