@@ -258,10 +258,12 @@ def write_jdbc_upsert(
     create_column_types: str | None = None,
 ) -> DataStreamWriter:
     """K3 extension: REPLAY-SAFE keyed JDBC upsert. The plain append sink
-    (write_jdbc_metrics) is exactly-once only for closed windows; under
-    ``update`` output mode (windows re-emit as events arrive) or after a
-    checkpoint loss it duplicates rows. This sink makes every micro-batch
-    an idempotent upsert keyed on ``keys``:
+    (write_jdbc_metrics) is at-least-once: a crash between the JDBC commit
+    and the micro-batch commit log replays that batch's append, and so do
+    ``update`` output mode (windows re-emit as events arrive) and a
+    checkpoint loss — each duplicates rows (making the append itself
+    idempotent is ROADMAP.md Direction 4). This sink makes every
+    micro-batch an idempotent upsert keyed on ``keys``:
 
       1. the batch overwrites a staging table (data flows executor -> DB
          over JDBC; nothing is collected to the driver),

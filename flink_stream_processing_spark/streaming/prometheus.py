@@ -9,9 +9,9 @@ Prometheus stack expects a ``/metrics`` endpoint to point at. This module
 closes that gap with a dependency-free exposition server:
 
 - ``PrometheusRegistry``: thread-safe gauge/counter store keyed by
-  (metric name, frozen label set).
-- ``render_exposition``: the text format — ``# HELP`` / ``# TYPE`` headers,
-  ``name{label="value"} 1.23`` samples, label-value escaping per the spec.
+  (metric name, frozen label set); its ``render()`` gives the text format —
+  ``# HELP`` / ``# TYPE`` headers, ``name{label="value"} 1.23`` samples,
+  label-value escaping per the spec.
 - ``PrometheusScrapeEndpoint``: stdlib ThreadingHTTPServer answering
   ``GET /metrics`` with ``text/plain; version=0.0.4``.
 - ``PrometheusMetricsListener``: exports each ``progress_record``
@@ -86,10 +86,6 @@ class PrometheusRegistry:
                     else:
                         out.append(f"{name} {value}")
             return "\n".join(out) + "\n"
-
-
-def render_exposition(registry: PrometheusRegistry) -> str:
-    return registry.render()
 
 
 class PrometheusScrapeEndpoint:

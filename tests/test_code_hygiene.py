@@ -87,3 +87,16 @@ def test_session_clone_isolates_conf_and_inherits_builder_defaults(spark):
     assert (
         clone.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     )
+
+
+def test_servers_stay_on_the_stdlib_http_server():
+    """Both servers in the package (the Prometheus scrape endpoint and the
+    metrics push server) are built on ``http.server``'s
+    ``ThreadingHTTPServer``: no hand-written accept loop or HTTP request
+    reader on a raw listening socket."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if "create_server(" in line:
+                offenders.append(f"{path.relative_to(PKG.parent)}:{i}")
+    assert not offenders, "\n".join(offenders)

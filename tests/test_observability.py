@@ -95,8 +95,11 @@ def test_foreach_batch_sink_mechanics(spark, tmp_path):
 # --- K5: WebSocket push sink -------------------------------------------------
 
 
-def _ws_connect(host, port):
-    """Raw-socket WebSocket client: handshake + frame decode, stdlib only."""
+def _ws_connect(host, port, path="/metrics-feed"):
+    """Raw-socket WebSocket client: handshake + frame decode, stdlib only.
+    The HTTP response is read byte-exact: the server may push a WebSocket
+    frame (SockJS 'o') right after the 101, and a block recv would swallow
+    it into the discarded header buffer."""
     import base64
     import os
     import socket
@@ -105,14 +108,16 @@ def _ws_connect(host, port):
     s = socket.create_connection((host, port), timeout=10)
     s.sendall(
         (
-            f"GET /metrics-feed HTTP/1.1\r\nHost: {host}:{port}\r\n"
+            f"GET {path} HTTP/1.1\r\nHost: {host}:{port}\r\n"
             "Upgrade: websocket\r\nConnection: Upgrade\r\n"
             f"Sec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
         ).encode("ascii")
     )
     resp = b""
-    while b"\r\n\r\n" not in resp:
-        resp += s.recv(4096)
+    while not resp.endswith(b"\r\n\r\n"):
+        b = s.recv(1)
+        assert b, "server closed during handshake"
+        resp += b
     return s, key, resp
 
 
@@ -448,32 +453,6 @@ def test_observed_metrics_in_streaming_progress(spark, tmp_path):
     assert seen == 1000
 
 
-def _ws_connect_path(host, port, path):
-    """Raw-socket WebSocket client to an explicit path (SockJS session URL)."""
-    import base64
-    import os
-    import socket
-
-    key = base64.b64encode(os.urandom(16)).decode("ascii")
-    s = socket.create_connection((host, port), timeout=10)
-    s.sendall(
-        (
-            f"GET {path} HTTP/1.1\r\nHost: {host}:{port}\r\n"
-            "Upgrade: websocket\r\nConnection: Upgrade\r\n"
-            f"Sec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
-        ).encode("ascii")
-    )
-    # read the HTTP response byte-exact: the server may push a WebSocket
-    # frame (SockJS 'o') immediately after the 101, and a block recv would
-    # swallow it into the discarded header buffer.
-    resp = b""
-    while not resp.endswith(b"\r\n\r\n"):
-        b = s.recv(1)
-        assert b, "server closed during handshake"
-        resp += b
-    return s, key, resp
-
-
 def test_sockjs_info_probe():
     """GET /metrics-feed/info answers the SockJS transport probe: JSON with
     websocket advertised, CORS open — what a stock sockjs-client checks
@@ -524,7 +503,7 @@ def test_sockjs_websocket_subtransport_stomp_end_to_end():
 
     srv = MetricsPushServer()
     try:
-        s, _, _ = _ws_connect_path(
+        s, _, _ = _ws_connect(
             srv.host, srv.port, "/metrics-feed/042/sess_abc/websocket"
         )
         s.settimeout(10)
@@ -571,263 +550,55 @@ def test_sockjs_websocket_subtransport_stomp_end_to_end():
         srv.close()
 
 
-def _sockjs_post(host, port, path, body=b"", timeout=10):
-    """One POST against the SockJS HTTP transports; returns (head, body)
-    with chunked transfer-encoding left raw (streaming tests parse it)."""
-    import socket as _socket
-
-    s = _socket.create_connection((host, port), timeout=timeout)
-    s.sendall(
-        (
-            f"POST {path} HTTP/1.1\r\nHost: {host}\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-        ).encode("ascii")
-        + body
-    )
-    resp = b""
-    while True:
-        try:
-            chunk = s.recv(4096)
-        except OSError:
-            break
-        if not chunk:
-            break
-        resp += chunk
-    s.close()
-    head, _, payload = resp.partition(b"\r\n\r\n")
-    return head, payload
-
-
-def test_sockjs_xhr_polling_stomp_end_to_end():
-    """The xhr long-poll fallback transport end-to-end with a STOMP
-    session: open (o), CONNECT via xhr_send -> CONNECTED on the next
-    poll, SUBSCRIBE, broadcast -> MESSAGE frame batch, heart-beat (h) on
-    an idle poll — the full sockjs-protocol polling contract a stock
-    client exercises when WebSocket upgrades are blocked."""
+def test_close_disconnects_every_client_and_stops_listening():
+    """close() with a raw, a STOMP and a SockJS-over-WebSocket client
+    attached: it returns promptly, every client reads EOF, no client stays
+    registered, and the port refuses new connections."""
     import json as _json
+    import socket
+    import time
+
+    import pytest
 
     from flink_stream_processing_spark.streaming.push import (
         MetricsPushServer,
         parse_stomp_frame,
     )
 
-    srv = MetricsPushServer(poll_timeout=0.4)
-    import os as _os
-    base = f"/metrics-feed/000/sess{_os.getpid()}"
+    srv = MetricsPushServer()
+    clients = []
     try:
-        head, body = _sockjs_post(srv.host, srv.port, f"{base}/xhr")
-        assert b"200 OK" in head and body == b"o\n"
-
-        connect = "CONNECT\naccept-version:1.2\n\n\x00"
-        head, _ = _sockjs_post(
-            srv.host, srv.port, f"{base}/xhr_send",
-            _json.dumps([connect]).encode(),
+        raw, _, _ = _ws_connect(srv.host, srv.port)
+        stomp, _, _ = _ws_connect(srv.host, srv.port)
+        sockjs, _, _ = _ws_connect(
+            srv.host, srv.port, "/metrics-feed/000/sess_close/websocket"
         )
-        assert b"204" in head
+        clients = [raw, stomp, sockjs]
+        for c in clients:
+            c.settimeout(10)
+        _ws_send_text(stomp, "CONNECT\naccept-version:1.2\n\n\x00")
+        assert parse_stomp_frame(_ws_read_text_frame(stomp))[0] == "CONNECTED"
+        assert _ws_read_text_frame(sockjs) == "o"
+        _ws_send_text(sockjs, _json.dumps(["CONNECT\naccept-version:1.2\n\n\x00"]))
+        (connected,) = _json.loads(_ws_read_text_frame(sockjs)[1:])
+        assert parse_stomp_frame(connected)[0] == "CONNECTED"
+        deadline = time.time() + 10
+        while srv.client_count < 3 and time.time() < deadline:
+            time.sleep(0.05)
+        assert srv.client_count == 3
 
-        head, body = _sockjs_post(srv.host, srv.port, f"{base}/xhr")
-        assert body.startswith(b"a[")
-        frames = _json.loads(body[1:].decode())
-        cmd, headers, _b = parse_stomp_frame(frames[0])
-        assert cmd == "CONNECTED" and headers["version"] == "1.2"
-
-        subscribe = "SUBSCRIBE\nid:7\ndestination:/topic/metrics\n\n\x00"
-        _sockjs_post(
-            srv.host, srv.port, f"{base}/xhr_send",
-            _json.dumps([subscribe]).encode(),
-        )
-        # idle poll while nothing is queued: heart-beat after poll_timeout
-        head, body = _sockjs_post(srv.host, srv.port, f"{base}/xhr")
-        assert body == b"h\n"
-
-        import threading as _threading
-        import time as _time
-
-        def later():
-            _time.sleep(0.15)
-            srv.broadcast('{"cnt": 1}')
-
-        t = _threading.Thread(target=later)
-        t.start()
-        head, body = _sockjs_post(srv.host, srv.port, f"{base}/xhr")
-        t.join()
-        frames = _json.loads(body[1:].decode())
-        cmd, headers, msg_body = parse_stomp_frame(frames[0])
-        assert cmd == "MESSAGE"
-        assert headers["destination"] == "/topic/metrics"
-        assert headers["subscription"] == "7"
-        assert _json.loads(msg_body) == {"cnt": 1}
-
-        # unknown session on xhr_send: 404 (spec)
-        head, _ = _sockjs_post(
-            srv.host, srv.port, "/metrics-feed/000/nosuch/xhr_send", b'["h"]'
-        )
-        assert b"404" in head
-    finally:
+        t0 = time.monotonic()
         srv.close()
-
-
-def test_sockjs_xhr_streaming_prelude_open_and_frames():
-    """The xhr_streaming fallback: chunked response opening with the
-    2048-byte h prelude, then o, then broadcast frames — and a SECOND
-    concurrent receiver on the same session gets c[2010] (sockjs-protocol:
-    one receiver per session)."""
-    import json as _json
-    import socket as _socket
-    import time as _time
-
-    from flink_stream_processing_spark.streaming.push import MetricsPushServer
-
-    srv = MetricsPushServer(poll_timeout=0.3)
-    import os as _os
-    base = f"/metrics-feed/000/stream{_os.getpid()}"
-    try:
-        s = _socket.create_connection((srv.host, srv.port), timeout=10)
-        s.sendall(
-            (
-                f"POST {base}/xhr_streaming HTTP/1.1\r\nHost: {srv.host}\r\n"
-                "Content-Length: 0\r\n\r\n"
-            ).encode("ascii")
-        )
-        _time.sleep(0.2)  # let prelude + o land
-        srv.broadcast('{"v": 42}')  # raw (no STOMP handshake on this session)
-        deadline = _time.time() + 5
-        buf = b""
-        while _time.time() < deadline and b'a["' not in buf:
-            s.settimeout(1.0)
-            try:
-                chunk = s.recv(8192)
-            except OSError:
-                break
-            if not chunk:
-                break
-            buf += chunk
-        assert b"Transfer-Encoding: chunked" in buf
-        assert b"h" * 2048 in buf  # the spec prelude
-        body_after_prelude = buf.split(b"h" * 2048, 1)[1]
-        assert b"o\n" in body_after_prelude  # open frame
-        assert b'a["{\\"v\\": 42}"]' in buf  # broadcast frame
-        # concurrent second receiver: c[2010]
-        head2, body2 = _sockjs_post(srv.host, srv.port, f"{base}/xhr")
-        assert b"c[2010" in body2
-        s.close()
+        assert time.monotonic() - t0 < 2.0
+        for c in clients:
+            c.settimeout(5)
+            assert c.recv(1) == b"", "client did not read EOF"
+        assert srv.client_count == 0
+        with pytest.raises(ConnectionRefusedError):
+            socket.create_connection((srv.host, srv.port), timeout=2)
     finally:
-        srv.close()
-
-
-def test_sockjs_abandoned_sessions_expire():
-    """A session whose receiver detached longer ago than the disconnect
-    window is purged on the next broadcast — an abandoned dashboard
-    client cannot accumulate queued frames forever on a 24/7 streaming
-    driver. A live (attached or recently-detached) session survives."""
-    import time as _time
-
-    from flink_stream_processing_spark.streaming.push import MetricsPushServer
-
-    # window sized well above the accept loop's 0.2 s idle tick (which
-    # since r9 purges independently of broadcast) so the two "survives"
-    # assertions cannot flake on a scheduler stall between poll and check
-    srv = MetricsPushServer(poll_timeout=0.2, disconnect_window=2.0)
-    import os as _os
-
-    base = f"/metrics-feed/000/gone{_os.getpid()}"
-    try:
-        head, body = _sockjs_post(srv.host, srv.port, f"{base}/xhr")
-        assert body == b"o\n"
-        with srv._lock:
-            assert len(srv._sessions) == 1
-        srv.broadcast("x")  # recently detached: survives, frame queued
-        with srv._lock:
-            assert len(srv._sessions) == 1
-        _time.sleep(2.5)  # idle past the window
-        srv.broadcast("y")
-        with srv._lock:
-            assert len(srv._sessions) == 0
-        # the expired id re-opens as a brand-new session (o frame again)
-        head, body = _sockjs_post(srv.host, srv.port, f"{base}/xhr")
-        assert body == b"o\n"
-    finally:
-        srv.close()
-
-
-def test_sockjs_open_frame_is_session_state_not_caller_state():
-    """The mandatory 'o' frame is consumed from SESSION state by the first
-    successful receiver: delivered exactly once per session id, regardless
-    of which request created the session (a caller-local created flag
-    could lose the open frame in a first-contact attach race)."""
-    from flink_stream_processing_spark.streaming.push import MetricsPushServer
-
-    srv = MetricsPushServer(poll_timeout=0.2)
-    try:
-        sess, busy = srv._session_attach("sid-open")
-        assert not busy
-        assert srv._next_frame(sess) == "o"
-        srv._session_detach(sess)
-        sess2, busy = srv._session_attach("sid-open")
-        assert sess2 is sess and not busy
-        assert srv._next_frame(sess2) == "h"  # once only — not 'o' again
-        srv._session_detach(sess2)
-    finally:
-        srv.close()
-
-
-def test_sockjs_second_receiver_collision_closes_whole_session():
-    """sockjs-protocol: a second receiving request on an attached session
-    closes the WHOLE session — the attached receiver is woken with the
-    c[2010] close frame too (not left long-polling on a half-dead
-    session), and the id is dropped so the next request starts fresh."""
-    import threading as _threading
-
-    from flink_stream_processing_spark.streaming.push import MetricsPushServer
-
-    srv = MetricsPushServer(poll_timeout=5.0)
-    try:
-        sess, busy = srv._session_attach("sid-collide")
-        assert not busy
-        assert srv._next_frame(sess) == "o"
-        got: list[str] = []
-        t = _threading.Thread(
-            target=lambda: got.append(srv._next_frame(sess))
-        )
-        t.start()  # attached receiver long-polls (5 s timeout)
-        sess2, busy2 = srv._session_attach("sid-collide")
-        assert sess2 is sess and busy2
-        t.join(timeout=3)  # woken by the collision, NOT after 5 s
-        assert not t.is_alive()
-        assert got == ['c[2010,"Another connection still open"]']
-        with srv._lock:
-            assert "sid-collide" not in srv._sessions  # id dropped
-        sess3, busy3 = srv._session_attach("sid-collide")
-        assert sess3 is not sess and not busy3  # fresh session
-        assert srv._next_frame(sess3) == "o"
-        srv._session_detach(sess3)
-    finally:
-        srv.close()
-
-
-def test_sockjs_abandoned_sessions_expire_without_broadcast():
-    """Expiry must not depend on broadcast traffic: with the streaming
-    query idle (zero broadcasts), a detached session past the disconnect
-    window is purged by the accept loop's idle tick."""
-    import os as _os
-    import time as _time
-
-    from flink_stream_processing_spark.streaming.push import MetricsPushServer
-
-    srv = MetricsPushServer(poll_timeout=0.2, disconnect_window=0.3)
-    base = f"/metrics-feed/000/idle{_os.getpid()}"
-    try:
-        head, body = _sockjs_post(srv.host, srv.port, f"{base}/xhr")
-        assert body == b"o\n"
-        deadline = _time.time() + 5
-        while _time.time() < deadline:
-            with srv._lock:
-                if not srv._sessions:
-                    break
-            _time.sleep(0.1)
-        with srv._lock:
-            assert srv._sessions == {}  # purged with NO broadcast involved
-    finally:
+        for c in clients:
+            c.close()
         srv.close()
 
 
@@ -891,35 +662,3 @@ def test_websocket_codec_64bit_length_form():
     out, rest = decode_client_frames(wire)
     assert rest == b""
     assert out == [(0x1, payload)]
-
-
-def test_sockjs_failed_open_frame_restored_before_detach():
-    """A failed 'o' delivery must re-queue the open frame BEFORE the
-    receiver detaches (r9 advice): restore-after-detach leaves a window
-    where a second receiver attaches, sees open_pending=False, and
-    delivers h/a[...] ahead of the re-queued 'o' — sockjs-protocol
-    requires 'o' to be the first frame a session ever delivers. Forcing
-    the send to fail on a pre-closed socket, the poll must return with
-    open_pending already True and the session detached, so the NEXT
-    receiver's first frame is 'o' again."""
-    import socket as _socket
-
-    from flink_stream_processing_spark.streaming.push import MetricsPushServer
-
-    srv = MetricsPushServer(poll_timeout=0.2)
-    try:
-        a, b = _socket.socketpair()
-        a.close()  # sendall on a closed socket raises OSError immediately
-        b.close()
-        srv._xhr_poll(a, "sid-fail-open")
-        with srv._lock:
-            sess = srv._sessions["sid-fail-open"]
-        with sess.cond:
-            assert sess.open_pending  # restored, not lost
-            assert not sess.receiving  # and the receiver did detach
-        sess2, busy = srv._session_attach("sid-fail-open")
-        assert sess2 is sess and not busy
-        assert srv._next_frame(sess2) == "o"  # redelivered first
-        srv._session_detach(sess2)
-    finally:
-        srv.close()

@@ -13,7 +13,6 @@ from flink_stream_processing_spark.streaming.prometheus import (
     PrometheusMetricsListener,
     PrometheusRegistry,
     PrometheusScrapeEndpoint,
-    render_exposition,
 )
 
 
@@ -23,7 +22,7 @@ def test_exposition_format_and_escaping():
     reg.set_gauge("rate", 12.5, {"query": 'a"b\\c'}, help_text="labeled")
     reg.inc_counter("rows_total", 100, {"query": "q1"})
     reg.inc_counter("rows_total", 50, {"query": "q1"})
-    text = render_exposition(reg)
+    text = reg.render()
     assert "# HELP engine_up liveness\n# TYPE engine_up gauge\nengine_up 1.0" in text
     assert 'rate{query="a\\"b\\\\c"} 12.5' in text
     assert "# TYPE rows_total counter" in text
