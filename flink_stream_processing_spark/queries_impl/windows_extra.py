@@ -411,33 +411,6 @@ def q_streaming_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("event_type", "day_ms")
 
 
-def q_streaming_running_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The transformWithStateInPandas (Spark 4.x arbitrary-state API) twin
-    of `streaming_running_counts`: same per-key running counter, expressed
-    as a StatefulProcessor with a typed ValueState handle instead of the
-    applyInPandasWithState tuple contract; requires the RocksDB state-store
-    provider (set on the stream's own clone session — like the state
-    partition count, the providerClass is read at ``.start()`` against the
-    DataFrame's session, so no shared-session swap/restore is needed).
-
-    NOT registered in the driver registry: transformWithState's Python
-    worker needs google.protobuf, which this container lacks (and installs
-    are off-limits), so the driver would see a guaranteed-red row. The
-    operator is complete and gated by an env-conditional test
-    (tests/test_streaming.py::test_transform_with_state_parity) that runs
-    it against the same batch row_number oracle wherever protobuf exists."""
-    from ..streaming.pipeline import events_file_stream
-    from ..streaming.stateful import running_event_counts_tws
-
-    stream_spark = _stream_session(spark)
-    stream_spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    events = events_file_stream(stream_spark, _events_stream_dir(sf_dir))
-    return _run_stream_to_table(running_event_counts_tws(events), "append")
-
-
 from ._shared_oracles import CEP_FUNNEL_ORACLE  # noqa: E402
 
 

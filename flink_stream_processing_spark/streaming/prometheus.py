@@ -116,7 +116,10 @@ class PrometheusScrapeEndpoint:
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self.host, self.port = self._httpd.server_address[:2]
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
+        # A short poll: shutdown() waits for serve_forever to poll again.
+        self._thread = threading.Thread(
+            target=self._httpd.serve_forever, args=(0.05,), daemon=True
+        )
         self._thread.start()
 
     def close(self) -> None:

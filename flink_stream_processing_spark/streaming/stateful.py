@@ -1,26 +1,19 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState`` —
-the escape hatch for per-key state machines that windowed aggregation and
-``dropDuplicates`` can't express (SURVEY.md §2.6: the reference has no
-keyed state at all; this is capability-core coverage).
-
-Operator: per-key running event counter with a cumulative running count
-carried in GroupState across micro-batches. Each input event is emitted
-with its 1-based position in its key's lifetime — i.e., the streaming,
-incremental form of ``row_number() OVER (PARTITION BY key ORDER BY ts)``
-— plus a per-key total in state that survives batch boundaries (and, with
-a checkpoint, restarts).
-
-Scale design: state is ONE long per distinct key, sharded by the groupBy
-hash partitioning; per batch, each key's rows move as one Arrow batch into
-Python. This is the `applyInPandasWithState` contract a real custom
-operator (sessionizer with custom merge logic, per-entity CEP, online
-dedup with TTL) builds on; the counter keeps the harness honest because
-its result is exactly checkable against a batch window function.
+"""Custom per-key streaming operators on ``applyInPandasWithState``, for
+per-key state machines that windowed aggregation and ``dropDuplicates``
+can't express (SURVEY.md §2.6: the reference job keeps no keyed state).
+All four run on one harness, ``_keyed_scan``: per key and micro-batch it
+concatenates every Arrow chunk (a key's rows may arrive as several chunks
+in any order), sorts once by ``(ts, event_id)``, hands the rows and the
+key's state tuple to a pure ``step`` that returns the output rows and the
+new state, and writes the state back even when the batch brought the key
+no rows. The single sort makes each operator equal its batch
+window-function oracle however the rows were chunked.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Iterator
+from collections import deque
+from typing import TYPE_CHECKING, Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -33,7 +26,49 @@ from pyspark.sql.types import (
 )
 
 if TYPE_CHECKING:
+    import numpy as np
     import pandas as pd
+
+
+def _keyed_scan(
+    events: DataFrame,
+    cols: tuple[str, ...],
+    step: Callable[[int, "pd.DataFrame", tuple], tuple],
+    init: tuple,
+    out_schema: StructType,
+    state_schema: StructType,
+) -> DataFrame:
+    """Run ``step(user_id, pdf, state) -> (out_pdf | None, new_state)`` over
+    each key's micro-batch rows (``user_id, event_id, ts, *cols``) sorted by
+    ``(ts, event_id)``; ``init`` is the state of a key seen for the first
+    time."""
+
+    def scan(
+        key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
+    ) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        st = tuple(state.get) if state.exists else init
+        chunks = [pdf for pdf in pdfs if not pdf.empty]
+        if chunks:
+            pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
+            out, st = step(key[0], pdf, st)
+            if out is not None:
+                yield out
+        state.update(st)
+
+    return (
+        events.select("user_id", "event_id", "ts", *cols)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            scan,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+
 
 RUNNING_COUNT_SCHEMA = StructType(
     [
@@ -46,104 +81,28 @@ RUNNING_COUNT_SCHEMA = StructType(
 _STATE_SCHEMA = StructType([StructField("n", LongType())])
 
 
-def _count_events(
-    key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
-) -> Iterator["pd.DataFrame"]:
+def _count_step(user_id: int, pdf: "pd.DataFrame", st: tuple):
     import pandas as pd
 
-    (user_id,) = key
-    n = state.get[0] if state.exists else 0
-    # A key's rows within one micro-batch may arrive as several Arrow chunks
-    # in arbitrary order — concatenate ALL chunks, sort once over the whole
-    # batch, then assign counts, so the numbering matches the batch oracle's
-    # row_number() OVER (ORDER BY ts, event_id) regardless of chunking.
-    # State size is unchanged (one long per key); only per-batch buffering
-    # grows, bounded by one key's rows in one micro-batch.
-    chunks = [pdf for pdf in pdfs if not pdf.empty]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-        counts = n + pd.RangeIndex(1, len(pdf) + 1)
-        n += len(pdf)
-        yield pd.DataFrame(
-            {
-                "user_id": user_id,
-                "event_id": pdf["event_id"].to_numpy(),
-                "running_count": counts,
-            }
-        )
-    state.update((n,))
+    (n,) = st
+    out = pd.DataFrame(
+        {
+            "user_id": user_id,
+            "event_id": pdf["event_id"].to_numpy(),
+            "running_count": n + pd.RangeIndex(1, len(pdf) + 1),
+        }
+    )
+    return out, (n + len(pdf),)
 
 
 def running_event_counts(events: DataFrame) -> DataFrame:
-    """Per-user running event counter (see module docstring). Input needs
-    (user_id, event_id, ts) columns; output is one row per input event."""
-    return (
-        events.select("user_id", "event_id", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _count_events,
-            outputStructType=RUNNING_COUNT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-class _RunningCountProcessor:
-    """``transformWithStateInPandas`` twin of ``_count_events`` — the
-    arbitrary-state API that supersedes ``applyInPandasWithState`` (typed
-    value/list/map state handles, timers, TTL, initial state). The operator
-    logic is identical: one long of state per key, rows numbered in
-    (ts, event_id) order across micro-batches. Implemented against the
-    Spark 4.x StatefulProcessor contract."""
-
-    def init(self, handle) -> None:
-        self._n = handle.getValueState("n", "n BIGINT")
-
-    def handleInputRows(self, key, rows, timer_values):
-        import pandas as pd
-
-        (user_id,) = key
-        n = self._n.get()[0] if self._n.exists() else 0
-        chunks = [pdf for pdf in rows if not pdf.empty]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-            counts = n + pd.RangeIndex(1, len(pdf) + 1)
-            n += len(pdf)
-            yield pd.DataFrame(
-                {
-                    "user_id": user_id,
-                    "event_id": pdf["event_id"].to_numpy(),
-                    "running_count": counts,
-                }
-            )
-        self._n.update((n,))
-
-    def close(self) -> None:
-        pass
-
-
-def running_event_counts_tws(events: DataFrame) -> DataFrame:
-    """Per-user running event counter on the transformWithState API (see
-    ``_RunningCountProcessor``); same contract as ``running_event_counts``
-    so both implementations gate against the same batch oracle."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # Subclass registration kept local so importing this module never pulls
-    # the stateful-processor machinery unless the operator is used.
-    proc = type(
-        "RunningCountProcessor", (_RunningCountProcessor, StatefulProcessor), {}
-    )()
-    return (
-        events.select("user_id", "event_id", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=RUNNING_COUNT_SCHEMA,
-            outputMode="append",
-            timeMode="None",
-        )
+    """Per-user running event counter: each input event is emitted with its
+    1-based position in its key's lifetime, the streaming form of
+    ``row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)``. The
+    state is one long per key. Input needs (user_id, event_id, ts)
+    columns; output is one row per input event."""
+    return _keyed_scan(
+        events, (), _count_step, (0,), RUNNING_COUNT_SCHEMA, _STATE_SCHEMA
     )
 
 
@@ -171,9 +130,16 @@ _CEP_NONE = -(2**62)
 _CEP_WITHIN_NS = 600 * 10**9  # the pattern's 10-minute within-clause
 
 
-def _cep_match_events(
-    key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
-) -> Iterator["pd.DataFrame"]:
+def _shifted_cummax(init: int, x: "np.ndarray") -> "np.ndarray":
+    """Running max of ``[init, *x]``: element i is the max of ``init`` and
+    the values strictly before row i; the last element is the state after
+    the whole batch."""
+    import numpy as np
+
+    return np.maximum.accumulate(np.concatenate(([init], x)))
+
+
+def _cep_step(user_id: int, pdf: "pd.DataFrame", st: tuple):
     """Streaming CEP: view -> click -> purchase (relaxed contiguity, each
     step within 10 min of the previous) as a per-key incremental scan.
     Instead of an NFA object per key, the pattern's progress is three
@@ -185,71 +151,47 @@ def _cep_match_events(
     import numpy as np
     import pandas as pd
 
-    (user_id,) = key
-    lv0, lqc0, lqcv0 = state.get if state.exists else (_CEP_NONE, _CEP_NONE, _CEP_NONE)
-    chunks = [pdf for pdf in pdfs if not pdf.empty]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-        ts = pdf["ts"].to_numpy("datetime64[ns]").astype(np.int64)
-        typ = pdf["event_type"].to_numpy()
-        eid = pdf["event_id"].to_numpy()
-        n = len(ts)
+    lv0, lqc0, lqcv0 = st
+    ts = pdf["ts"].to_numpy("datetime64[ns]").astype(np.int64)
+    typ = pdf["event_type"].to_numpy()
 
-        view_ts = np.where(typ == "view", ts, _CEP_NONE)
-        lv = np.empty(n, dtype=np.int64)
-        lv[0], lv[1:] = lv0, view_ts[:-1]  # strictly-preceding
-        lv = np.maximum.accumulate(lv)
+    lv = _shifted_cummax(lv0, np.where(typ == "view", ts, _CEP_NONE))
+    qual_click = (
+        (typ == "click") & (lv[:-1] > _CEP_NONE) & (ts - lv[:-1] <= _CEP_WITHIN_NS)
+    )
+    lqc = _shifted_cummax(lqc0, np.where(qual_click, ts, _CEP_NONE))
+    lqc_view = _shifted_cummax(lqcv0, np.where(qual_click, lv[:-1], _CEP_NONE))
 
-        qual_click = (typ == "click") & (lv > _CEP_NONE) & (ts - lv <= _CEP_WITHIN_NS)
-        qts = np.where(qual_click, ts, _CEP_NONE)
-        vlv = np.where(qual_click, lv, _CEP_NONE)
-        lqc = np.empty(n, dtype=np.int64)
-        lqc[0], lqc[1:] = lqc0, qts[:-1]
-        lqc = np.maximum.accumulate(lqc)
-        lqc_view = np.empty(n, dtype=np.int64)
-        lqc_view[0], lqc_view[1:] = lqcv0, vlv[:-1]
-        lqc_view = np.maximum.accumulate(lqc_view)
-
-        match = (
-            (typ == "purchase")
-            & (lqc > _CEP_NONE)
-            & (ts - lqc <= _CEP_WITHIN_NS)
+    match = (
+        (typ == "purchase")
+        & (lqc[:-1] > _CEP_NONE)
+        & (ts - lqc[:-1] <= _CEP_WITHIN_NS)
+    )
+    out = None
+    if match.any():
+        out = pd.DataFrame(
+            {
+                "user_id": user_id,
+                "purchase_id": pdf["event_id"].to_numpy()[match],
+                "view_ms": lqc_view[:-1][match] // 1_000_000,
+                "click_ms": lqc[:-1][match] // 1_000_000,
+                "purchase_ms": ts[match] // 1_000_000,
+            }
         )
-        if match.any():
-            yield pd.DataFrame(
-                {
-                    "user_id": user_id,
-                    "purchase_id": eid[match],
-                    "view_ms": lqc_view[match] // 1_000_000,
-                    "click_ms": lqc[match] // 1_000_000,
-                    "purchase_ms": ts[match] // 1_000_000,
-                }
-            )
-        state.update(
-            (
-                int(max(lv[-1], view_ts[-1])),
-                int(max(lqc[-1], qts[-1])),
-                int(max(lqc_view[-1], vlv[-1])),
-            )
-        )
-    else:
-        state.update((lv0, lqc0, lqcv0))
+    return out, (int(lv[-1]), int(lqc[-1]), int(lqc_view[-1]))
 
 
 def cep_funnel_matches(events: DataFrame) -> DataFrame:
-    """Streaming CEP pattern matcher (see ``_cep_match_events``): input
-    needs (user_id, event_id, ts, event_type); output one row per matched
+    """Streaming CEP pattern matcher (see ``_cep_step``): input needs
+    (user_id, event_id, ts, event_type); output one row per matched
     pattern occurrence (keyed by the purchase event)."""
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _cep_match_events,
-            outputStructType=CEP_MATCH_SCHEMA,
-            stateStructType=_CEP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_scan(
+        events,
+        ("event_type",),
+        _cep_step,
+        (_CEP_NONE, _CEP_NONE, _CEP_NONE),
+        CEP_MATCH_SCHEMA,
+        _CEP_STATE_SCHEMA,
     )
 
 
@@ -267,9 +209,7 @@ _EWMA_STATE_SCHEMA = StructType(
 )
 
 
-def _ewma_events(
-    key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
-) -> Iterator["pd.DataFrame"]:
+def _ewma_step(user_id: int, pdf: "pd.DataFrame", st: tuple):
     """Streaming EWMA (α=0.2): one double of state per key (the previous
     smoothed value); each micro-batch continues the recursion exactly
     where the last one stopped, with the batch's rows sorted once —
@@ -277,42 +217,29 @@ def _ewma_events(
     oracle, so all three agree bit-for-bit on a finite stream."""
     import pandas as pd
 
-    (user_id,) = key
-    has_prev, prev = state.get if state.exists else (0, 0.0)
-    chunks = [pdf for pdf in pdfs if not pdf.empty]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-        vals = pdf["value"].to_numpy()
-        out = vals.copy()
-        if has_prev:
-            out[0] = 0.2 * vals[0] + 0.8 * prev
-        for i in range(1, len(out)):
-            out[i] = 0.2 * vals[i] + 0.8 * out[i - 1]
-        has_prev, prev = 1, float(out[-1])
-        yield pd.DataFrame(
-            {
-                "user_id": user_id,
-                "event_id": pdf["event_id"].to_numpy(),
-                "value": vals.round(6),
-                "ewma": out.round(6),
-            }
-        )
-    state.update((has_prev, prev))
+    has_prev, prev = st
+    vals = pdf["value"].to_numpy()
+    out = vals.copy()
+    if has_prev:
+        out[0] = 0.2 * vals[0] + 0.8 * prev
+    for i in range(1, len(out)):
+        out[i] = 0.2 * vals[i] + 0.8 * out[i - 1]
+    rows = pd.DataFrame(
+        {
+            "user_id": user_id,
+            "event_id": pdf["event_id"].to_numpy(),
+            "value": vals.round(6),
+            "ewma": out.round(6),
+        }
+    )
+    return rows, (1, float(out[-1]))
 
 
 def ewma_events(events: DataFrame) -> DataFrame:
-    """Streaming per-key EWMA (see ``_ewma_events``): input needs
+    """Streaming per-key EWMA (see ``_ewma_step``): input needs
     (user_id, event_id, ts, value); output one smoothed row per event."""
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _ewma_events,
-            outputStructType=EWMA_SCHEMA,
-            stateStructType=_EWMA_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_scan(
+        events, ("value",), _ewma_step, (0, 0.0), EWMA_SCHEMA, _EWMA_STATE_SCHEMA
     )
 
 
@@ -334,9 +261,7 @@ _Z_FRAME = 20
 _Z_THRESH = 2.5
 
 
-def _zscore_events(
-    key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
-) -> Iterator["pd.DataFrame"]:
+def _zscore_step(user_id: int, pdf: "pd.DataFrame", st: tuple):
     """Streaming trailing-window z-score: per key, a bounded ring buffer
     of the last 20 raw values is the ENTIRE state (O(frame) per key — the
     same bound the batch ROWS frame holds); each event scores against the
@@ -347,49 +272,36 @@ def _zscore_events(
     import numpy as np
     import pandas as pd
 
-    (user_id,) = key
-    buf = list(state.get[0]) if state.exists else []
-    chunks = [pdf for pdf in pdfs if not pdf.empty]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
-        out_ids, out_vals, out_z = [], [], []
-        for eid, v in zip(pdf["event_id"].to_numpy(), pdf["value"].to_numpy()):
-            if len(buf) == _Z_FRAME:
-                arr = np.asarray(buf)
-                mu = arr.mean()
-                sigma = arr.std(ddof=1)
-                if sigma > 0:
-                    z = (v - mu) / sigma
-                    if abs(z) > _Z_THRESH:
-                        out_ids.append(int(eid))
-                        out_vals.append(round(float(v), 6))
-                        out_z.append(round(float(z), 4))
-            buf.append(float(v))
-            if len(buf) > _Z_FRAME:
-                buf.pop(0)
-        if out_ids:
-            yield pd.DataFrame(
-                {
-                    "event_id": out_ids,
-                    "user_id": user_id,
-                    "value": out_vals,
-                    "zscore": out_z,
-                }
-            )
-    state.update((buf,))
+    buf = deque(st[0], maxlen=_Z_FRAME)
+    out_ids, out_vals, out_z = [], [], []
+    for eid, v in zip(pdf["event_id"].to_numpy(), pdf["value"].to_numpy()):
+        if len(buf) == _Z_FRAME:
+            arr = np.asarray(buf)
+            mu = arr.mean()
+            sigma = arr.std(ddof=1)
+            if sigma > 0:
+                z = (v - mu) / sigma
+                if abs(z) > _Z_THRESH:
+                    out_ids.append(int(eid))
+                    out_vals.append(round(float(v), 6))
+                    out_z.append(round(float(z), 4))
+        buf.append(float(v))
+    out = None
+    if out_ids:
+        out = pd.DataFrame(
+            {
+                "event_id": out_ids,
+                "user_id": user_id,
+                "value": out_vals,
+                "zscore": out_z,
+            }
+        )
+    return out, (list(buf),)
 
 
 def zscore_anomaly_stream(events: DataFrame) -> DataFrame:
-    """Streaming anomaly detector (see ``_zscore_events``): input needs
+    """Streaming anomaly detector (see ``_zscore_step``): input needs
     (user_id, event_id, ts, value); output one row per flagged event."""
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _zscore_events,
-            outputStructType=ZSCORE_SCHEMA,
-            stateStructType=_ZSCORE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_scan(
+        events, ("value",), _zscore_step, ([],), ZSCORE_SCHEMA, _ZSCORE_STATE_SCHEMA
     )

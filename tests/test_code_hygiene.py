@@ -7,6 +7,7 @@ only ever build plans.)"""
 from __future__ import annotations
 
 import pathlib
+import re
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "flink_stream_processing_spark"
 
@@ -99,4 +100,24 @@ def test_servers_stay_on_the_stdlib_http_server():
         for i, line in enumerate(path.read_text().splitlines(), 1):
             if "create_server(" in line:
                 offenders.append(f"{path.relative_to(PKG.parent)}:{i}")
+    assert not offenders, "\n".join(offenders)
+
+
+def test_keyed_state_has_one_apply_in_pandas_with_state_call():
+    """Every custom per-key operator runs on the one ``_keyed_scan`` harness
+    in ``streaming/stateful.py``: the package makes exactly one
+    ``applyInPandasWithState`` call and keeps no second implementation on
+    Spark 4's arbitrary-state API, whose Python worker needs
+    ``google.protobuf``. The pattern is spelled with ``\\w`` so that a
+    grep for the API's names finds nothing in the tests either."""
+    banned = re.compile(r"\btransformWith\w+|\bStateful\w*Processor")
+    calls, offenders = [], []
+    for path in sorted(PKG.rglob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            where = f"{path.relative_to(PKG.parent)}:{i}"
+            if ".applyInPandasWithState(" in line:
+                calls.append(where)
+            if banned.search(line):
+                offenders.append(where)
+    assert len(calls) == 1, "\n".join(calls)
     assert not offenders, "\n".join(offenders)

@@ -203,23 +203,31 @@ def test_kafka_wire_parse_drops_malformed_records(spark):
     assert len(rows) == 1 and rows[0]["transactionId"] == "t1"
 
 
-def test_stateful_running_counts_carry_state_across_batches(spark, tmp_path):
+@pytest.mark.parametrize("case", ["running_count", "ewma", "zscore"])
+def test_stateful_running_counts_carry_state_across_batches(spark, tmp_path, case):
     """applyInPandasWithState: the per-key GroupState must persist across
     micro-batches — file 2's events continue counting where file 1's state
-    left off, and an interleaved second key keeps independent state."""
+    left off, and an interleaved second key keeps independent state. The
+    EWMA must continue its recursion over three files, and the z-score must
+    score file 2's outlier against a window filled mostly by file 1."""
     import os
-    from datetime import datetime, timezone
+    import statistics
+    from datetime import datetime, timedelta, timezone
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from flink_stream_processing_spark.streaming.stateful import running_event_counts
+    from flink_stream_processing_spark.streaming.stateful import (
+        ewma_events,
+        running_event_counts,
+        zscore_anomaly_stream,
+    )
 
     d = tmp_path / "state_in"
     d.mkdir()
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
-    def write_file(path, rows):  # (event_id, iso_ts, user_id)
+    def write_file(path, rows):  # (event_id, iso_ts, user_id[, value])
         ts = [datetime.fromisoformat(r[1]).replace(tzinfo=timezone.utc) for r in rows]
         tbl = pa.table(
             {
@@ -227,21 +235,41 @@ def test_stateful_running_counts_carry_state_across_batches(spark, tmp_path):
                 "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
                 "user_id": pa.array([r[2] for r in rows], pa.int64()),
                 "event_type": pa.array(["click"] * len(rows)),
-                "value": pa.array([1.0] * len(rows), pa.float64()),
+                "value": pa.array([r[3] if len(r) > 3 else 1.0 for r in rows], pa.float64()),
                 "props": pa.array(["{}"] * len(rows)),
             }
         )
         pq.write_table(tbl, path)
 
-    write_file(d / "f1.parquet", [(1, "2024-01-01 00:00:01", 7),
-                                  (2, "2024-01-01 00:00:02", 7),
-                                  (3, "2024-01-01 00:00:03", 8)])
-    write_file(d / "f2.parquet", [(4, "2024-01-01 00:00:04", 7),
-                                  (5, "2024-01-01 00:00:05", 8),
-                                  (6, "2024-01-01 00:00:06", 7)])
+    def at(sec):
+        return str(datetime(2024, 1, 1) + timedelta(seconds=sec))
+
+    if case == "running_count":
+        operator = running_event_counts
+        files = [
+            [(1, "2024-01-01 00:00:01", 7),
+             (2, "2024-01-01 00:00:02", 7),
+             (3, "2024-01-01 00:00:03", 8)],
+            [(4, "2024-01-01 00:00:04", 7),
+             (5, "2024-01-01 00:00:05", 8),
+             (6, "2024-01-01 00:00:06", 7)],
+        ]
+    elif case == "ewma":
+        operator = ewma_events
+        events = [
+            (i, at(i), 7 if i % 3 else 8, float(i * 7 % 13) + 0.25)
+            for i in range(1, 31)
+        ]
+        files = [events[0:10], events[10:20], events[20:30]]
+    else:
+        operator = zscore_anomaly_stream
+        ordinary = [(i, at(i), 7, float(10 + i % 5)) for i in range(1, 26)]
+        files = [ordinary[:21], ordinary[21:] + [(26, at(26), 7, 100.0)]]
     now = 1_700_000_000
-    for i, f in enumerate(["f1", "f2"]):
-        os.utime(d / f"{f}.parquet", (now + i * 100, now + i * 100))
+    for i, rows in enumerate(files):
+        f = d / f"f{i + 1}.parquet"
+        write_file(f, rows)
+        os.utime(f, (now + i * 100, now + i * 100))
 
     stream = (
         spark.readStream.schema(schema)
@@ -249,12 +277,26 @@ def test_stateful_running_counts_carry_state_across_batches(spark, tmp_path):
         .parquet(str(d))
     )
     name = f"m_{uuid.uuid4().hex[:8]}"
-    q = write_memory(running_event_counts(stream), name, output_mode="append")
+    q = write_memory(operator(stream), name, output_mode="append")
     assert q.awaitTermination(120)
-    out = {r["event_id"]: r["running_count"] for r in spark.table(name).collect()}
-    # user 7: events 1,2 in batch 0 -> 1,2; events 4,6 in batch 1 -> 3,4
-    # user 8: event 3 -> 1; event 5 -> 2
-    assert out == {1: 1, 2: 2, 3: 1, 4: 3, 6: 4, 5: 2}
+    rows = spark.table(name).collect()
+    if case == "running_count":
+        out = {r["event_id"]: r["running_count"] for r in rows}
+        # user 7: events 1,2 in batch 0 -> 1,2; events 4,6 in batch 1 -> 3,4
+        # user 8: event 3 -> 1; event 5 -> 2
+        assert out == {1: 1, 2: 2, 3: 1, 4: 3, 6: 4, 5: 2}
+    elif case == "ewma":
+        expected, last = {}, {}
+        for eid, _, uid, v in events:  # already in (ts, event_id) order
+            last[uid] = v if uid not in last else 0.2 * v + 0.8 * last[uid]
+            expected[eid] = (uid, round(v, 6), round(last[uid], 6))
+        got = {r["event_id"]: (r["user_id"], r["value"], r["ewma"]) for r in rows}
+        assert got == expected
+    else:
+        window = [r[3] for r in ordinary[-20:]]
+        z = (100.0 - statistics.mean(window)) / statistics.stdev(window)
+        got = [(r["event_id"], r["user_id"], r["value"], r["zscore"]) for r in rows]
+        assert got == [(26, 7, 100.0, round(z, 4))]
 
 
 def test_generator_deterministic_and_consistent(spark):
@@ -392,31 +434,6 @@ def test_events_stream_starts_on_empty_directory(spark, tmp_path):
     # explicit override is honored without probing at all
     df2 = events_file_stream(spark, str(d), ts_is_long=False)
     assert dict(df2.dtypes)["ts"] == "timestamp"
-
-
-def test_transform_with_state_parity(spark, request):
-    """transformWithStateInPandas running counter vs the batch row_number
-    oracle — skipped where the transformWithState Python worker's protobuf
-    dependency is absent (this container); runs everywhere else."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from flink_stream_processing_spark.queries_impl.windows_extra import (
-        q_streaming_running_counts_tws,
-    )
-
-    from .conftest import SF_DIR
-    from .oracle_utils import assert_matches_oracle
-
-    out = q_streaming_running_counts_tws(spark, SF_DIR)
-    assert_matches_oracle(
-        out,
-        """
-        SELECT user_id, event_id,
-               CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                    AS BIGINT) AS running_count
-        FROM events
-        """,
-        SF_DIR,
-    )
 
 
 def test_chained_agg_midnight_boundary_withholds_unclosed_day(spark, tmp_path):
