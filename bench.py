@@ -448,18 +448,11 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, float]:
     )
 
     src = tempfile.mkdtemp(prefix="bench_stream_src_")
-    # State partition count is fixed when the streaming query is planned
-    # (at .start()) from spark.sql.shuffle.partitions: size it to the state
-    # volume (~10k windows here), not the CPU count — per-batch state-store
-    # commit cost scales with partition count (the same sizing rule as at
-    # 100 TB). Restored after the stream finishes.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.parquet(f"{sf_dir}/events.parquet")
         raw.repartition(16).write.mode("overwrite").parquet(src)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         tx = as_transactions(events_file_stream(spark, src, max_files_per_trigger=2))
         agg = streaming_window_metrics(tx)
         t0 = time.perf_counter()
@@ -484,7 +477,6 @@ def bench_streaming(spark, sf_dir: str) -> dict[str, float]:
             "streaming_state_bytes": max((r["state_bytes"] for r in records), default=0),
         }
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         shutil.rmtree(src, ignore_errors=True)
 
 

@@ -41,21 +41,13 @@ def table_stream_dir(sf_dir: str, table: str) -> str:
 
 def _stream_session(spark: SparkSession) -> SparkSession:
     """Session CLONE for one streaming query (``spark.newSession()``:
-    private SQL conf, shared SparkContext — same recipe as
-    ``file_formats.py``). State partitioning is sized to the state volume
-    (the 100 TB sizing rule): the state-partition count is fixed at
-    ``.start()`` planning time from the *stream's own session's*
-    ``spark.sql.shuffle.partitions``, and per-batch state-store commit
-    cost scales with it — 8 partitions vs a CPU-count default measured
-    2.6-7x faster on these fixtures with identical results. Setting it on
-    a clone means a concurrent query planning against the shared session
-    can never observe the swap (the conf-mutation hazard the r7 verdict
-    flagged); builder-level engine defaults (UTC timezone, nanosAsLong)
-    are inherited by the clone (pinned by
+    private SQL conf, temp views and query manager, shared SparkContext).
+    The query's memory-sink view lands in the clone, not in the shared
+    session a concurrent query is planning against. Builder-level engine
+    defaults (UTC timezone, nanosAsLong, one state partition on a local
+    master — ``session.get_spark``) are inherited by the clone (pinned by
     ``test_session_clone_isolates_conf_and_inherits_builder_defaults``)."""
-    stream_spark = spark.newSession()
-    stream_spark.conf.set("spark.sql.shuffle.partitions", "8")
-    return stream_spark
+    return spark.newSession()
 
 
 # Per-run progress record of the LAST _run_stream_to_table call: the

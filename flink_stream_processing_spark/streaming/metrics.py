@@ -18,6 +18,9 @@ the Prometheus endpoint (streaming/prometheus.py) and the WebSocket push
 - sums over EVERY state operator: ``state_rows``, ``state_bytes`` (and
   ``state_memory_mb``), ``state_commit_ms``, ``state_update_ms``,
   ``late_rows_dropped`` (behind the watermark) and ``dup_rows_dropped``;
+- ``state_partitions``: the largest ``numShufflePartitions`` over the
+  state operators (0 without state), the state-store count each operator
+  commits per batch (``session.get_spark``);
 - ``watermark_ms``, and ``event_time_lag_ms``: batch end (start +
   ``triggerExecution``) minus the newest event time, the reference's
   ``Latency`` field. Each is None when the batch reports no event time.
@@ -86,6 +89,7 @@ def progress_record(progress) -> dict[str, Any]:
         "state_update_ms": sum(o["allUpdatesTimeMs"] for o in ops),
         "late_rows_dropped": sum(o["numRowsDroppedByWatermark"] for o in ops),
         "dup_rows_dropped": sum(o["customMetrics"].get("numDroppedDuplicateRows", 0) for o in ops),
+        "state_partitions": max((o["numShufflePartitions"] for o in ops), default=0),
         "watermark_ms": _epoch_ms(ev.get("watermark")),
         "event_time_lag_ms": None if newest is None else _epoch_ms(p["timestamp"]) + trigger_ms - newest,
     }

@@ -19,6 +19,13 @@ reference instead buffers every event per window on one thread
 (AllWindowFunction, parallelism 1) — Spark's plan shards the same
 computation across executors and keeps only accumulators in state.
 
+State partitions: ``session.get_spark`` gives every stateful operator of a
+new query one state partition on a local master (one store commit per
+operator and micro-batch, the parallelism the reference keeps state at);
+on a cluster the count follows ``spark.sql.shuffle.partitions``. A query's
+checkpoint fixes its count: restarts keep it, and changing it takes a new
+checkpoint.
+
 100 TB state story: the default HDFS-backed state store keeps every
 partition's state on-heap — fine for O(open windows) aggregates, but a
 high-cardinality stateful op (streaming dedup over billions of keys,

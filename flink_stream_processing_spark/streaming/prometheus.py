@@ -135,6 +135,7 @@ _METRICS = (
     ("batch_duration_ms", "spark_streaming_batch_duration_ms", "gauge", "Micro-batch latency (reference: flink latency metric)"),
     ("state_rows", "spark_streaming_state_rows", "gauge", "Keyed rows over every stateful operator"),
     ("state_bytes", "spark_streaming_state_bytes", "gauge", "Memory of every stateful operator (reference: managed memory)"),
+    ("state_partitions", "spark_streaming_state_partitions", "gauge", "State-store partitions per stateful operator (largest)"),
     ("num_input_rows", "spark_streaming_input_rows_total", "counter", "Cumulative input rows (counter)"),
 )
 

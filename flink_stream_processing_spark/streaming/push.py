@@ -446,5 +446,6 @@ class WebSocketMetricsPush(ProgressListener):
             "output_rate_rows_per_sec": r["processed_rows_per_sec"],
             "latency_ms": r["batch_duration_ms"],
             "state_memory_mb": r["state_memory_mb"],
+            "state_partitions": r["state_partitions"],
         }
         self.server.broadcast(json.dumps(payload))

@@ -9,6 +9,8 @@ from __future__ import annotations
 import pathlib
 import re
 
+from flink_stream_processing_spark.session import STATE_PARTITIONS_CONF
+
 PKG = pathlib.Path(__file__).resolve().parent.parent / "flink_stream_processing_spark"
 
 FORBIDDEN = [
@@ -37,9 +39,8 @@ def test_operators_never_mutate_session_conf():
     ``spark.sql.shuffle.partitions``): the swap silently re-plans any
     CONCURRENT query on the shared SparkSession. Iterative loops size
     their shuffles with explicit ``repartition(numPartitions, key)``
-    instead. (Streaming query wrappers may still pin state-store counts
-    at ``.start()`` time — that conf is read once per query, not shared
-    planning state — so the rule is scoped to operators/.)"""
+    instead. (queries_impl/ may set conf on a session clone; see the next
+    test.)"""
     offenders = []
     for path in sorted((PKG / "operators").rglob("*.py")):
         for i, line in enumerate(path.read_text().splitlines(), 1):
@@ -53,11 +54,9 @@ def test_queries_never_mutate_the_shared_session_conf():
     body may set conf only on a session CLONE (``spark.newSession()``,
     private SQL conf, shared SparkContext) — never on the shared session
     object a concurrent query is planning against. Enforced lexically:
-    every ``.conf.set(`` receiver must be a clone-named local
-    (``stream_spark`` / ``v2_spark``), not ``spark``. Covers ALL of
-    queries_impl/ since r9 (windows_extra.py's two deferred swaps were
-    rewritten onto clone sessions — the last carve-out is gone)."""
-    allowed_receivers = ("stream_spark", "v2_spark")
+    every ``.conf.set(`` receiver must be the clone-named local
+    ``v2_spark``, not ``spark``. Covers ALL of queries_impl/."""
+    allowed_receivers = ("v2_spark",)
     offenders = []
     for path in sorted((PKG / "queries_impl").rglob("*.py")):
         for i, line in enumerate(path.read_text().splitlines(), 1):
@@ -69,13 +68,30 @@ def test_queries_never_mutate_the_shared_session_conf():
     assert not offenders, "\n".join(offenders)
 
 
+def test_only_get_spark_sizes_stream_state():
+    """``session.get_spark`` is the one place that sizes streaming state
+    (one partition on a local master): no other module of the package, and
+    not ``bench.py``, sets ``spark.sql.shuffle.partitions`` or names the
+    state-partition conf."""
+    session_py = PKG / "session.py"
+    offenders = []
+    for path in [*sorted(PKG.rglob("*.py")), PKG.parent / "bench.py"]:
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            sets_shuffle = "conf.set(" in line and "spark.sql.shuffle.partitions" in line
+            names_state = STATE_PARTITIONS_CONF in line and path != session_py
+            if sets_shuffle or names_state:
+                offenders.append(f"{path.relative_to(PKG.parent)}:{i}")
+    assert not offenders, "\n".join(offenders)
+
+
 def test_session_clone_isolates_conf_and_inherits_builder_defaults(spark):
     """The two assumptions behind the clone-based conf scoping:
     (1) ISOLATION — conf set on a ``spark.newSession()`` clone is
     invisible to the original session (the whole point of the ban);
     (2) INHERITANCE — the clone still carries the builder-level engine
-    defaults (UTC timezone, nanosAsLong) that load-bearing reads depend
-    on, so a clone doesn't silently revert to Spark defaults."""
+    defaults (UTC timezone, nanosAsLong, one state partition) that
+    load-bearing reads and streaming state depend on, so a clone doesn't
+    silently revert to Spark defaults."""
     clone = spark.newSession()
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
@@ -88,6 +104,7 @@ def test_session_clone_isolates_conf_and_inherits_builder_defaults(spark):
     assert (
         clone.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     )
+    assert clone.conf.get(STATE_PARTITIONS_CONF) == "1"
 
 
 def test_servers_stay_on_the_stdlib_http_server():

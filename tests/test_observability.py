@@ -236,6 +236,7 @@ def test_dashboard_card_ids_match_push_payload_fields():
         "output_rate_rows_per_sec",
         "latency_ms",
         "state_memory_mb",
+        "state_partitions",
         "batch_id",
     }
     assert card_ids == payload_fields

@@ -73,7 +73,6 @@ def two_state_stream(spark, tmp_path_factory):
         os.utime(path, (1_700_000_000 + f, 1_700_000_000 + f))
 
     stream_spark = spark.newSession()
-    stream_spark.conf.set("spark.sql.shuffle.partitions", "1")
     s = SimpleNamespace(capture=_Capture(), collector=ProgressCollector(),
                         registry=PrometheusRegistry(), push=_Broadcasts(),
                         name=f"two_state_{uuid.uuid4().hex[:8]}")
@@ -128,6 +127,7 @@ def _expected(e: dict) -> dict:
         "state_update_ms": sum(o["allUpdatesTimeMs"] for o in ops),
         "late_rows_dropped": sum(o["numRowsDroppedByWatermark"] for o in ops),
         "dup_rows_dropped": sum(o["customMetrics"].get("numDroppedDuplicateRows", 0) for o in ops),
+        "state_partitions": max(o["numShufflePartitions"] for o in ops),
         "watermark_ms": _ms(ev["watermark"]),
         "event_time_lag_ms": (_ms(e["timestamp"]) + d["triggerExecution"] - _ms(ev["max"])
                               if "max" in ev else None),
@@ -163,3 +163,14 @@ def test_every_listener_sums_all_state_operators(two_state_stream):
     exposition = s.registry.render()
     last = s.raw[-1]["batchId"]
     assert f'spark_streaming_state_rows{{query="{s.name}"}} {float(rows[last])}' in exposition
+
+
+def test_every_listener_reports_one_state_partition(two_state_stream):
+    """On ``get_spark``'s local session both state operators commit one
+    store per batch, and ProgressCollector, the push payload and the
+    Prometheus gauge all say so."""
+    s = two_state_stream
+    assert {o["numShufflePartitions"] for e in s.raw for o in e["stateOperators"]} == {1}
+    assert {r["state_partitions"] for r in s.collector.progress} == {1}
+    assert {m["state_partitions"] for m in s.push.payloads} == {1}
+    assert f'spark_streaming_state_partitions{{query="{s.name}"}} 1.0' in s.registry.render()

@@ -53,11 +53,10 @@ def test_reference_topology_composed_end_to_end(spark, tmp_path):
     d.mkdir()
     (d / "events.parquet").symlink_to(f"{SF_SMALL}/events.parquet")
 
-    # streams on a session clone with workload-sized state partitions
-    # (the engine's sizing rule); listeners register on the clone's
-    # manager because the queries start there
+    # streams on a session clone, so only these queries reach the
+    # listeners: they register on the clone's manager because the queries
+    # start there
     stream_spark = spark.newSession()
-    stream_spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     srv = MetricsPushServer()
     push_listener = WebSocketMetricsPush(srv)

@@ -315,10 +315,8 @@ def _run_metrics_stream(spark, src: str, qname: str, provider: str | None):
         streaming_window_metrics,
     )
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     old_prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         if provider:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
             spark.conf.set(
@@ -363,7 +361,6 @@ def _run_metrics_stream(spark, src: str, qname: str, provider: str | None):
             "checksum": checksum,
         }
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         if provider:
             if old_prov is None:
                 spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

@@ -527,53 +527,80 @@ def test_fractional_rate_generator_runs(spark):
     assert all(r.transactionId in batch_ids for r in rows)
 
 
-def test_clone_session_shuffle_partitions_reach_state_store(spark, tmp_path):
-    """The load-bearing assumption of the r9 windows_extra rewrite: a
-    streaming query built entirely on a `spark.newSession()` clone reads
-    `spark.sql.shuffle.partitions` from the CLONE at `.start()` — the
-    state-partition count in the reported progress must equal the clone's
-    value, not the shared session's, and the shared session's conf must
-    be untouched throughout."""
+def _offset_log_state_partitions(ckpt) -> set[str]:
+    """The state partition count each batch of the offset log records
+    (Spark stores it as ``spark.sql.shuffle.partitions``)."""
+    import json as _json
+    import pathlib
+
+    logs = [f for f in pathlib.Path(ckpt, "offsets").iterdir() if f.name.isdigit()]
+    assert logs, "no offset log written"
+    return {
+        _json.loads(f.read_text().splitlines()[1])["conf"]["spark.sql.shuffle.partitions"]
+        for f in logs
+    }
+
+
+def test_new_query_gets_one_state_partition_per_operator(spark, tmp_path):
+    """``get_spark`` on a local master gives every stateful operator of a
+    new query ONE state partition, whatever ``spark.sql.shuffle.partitions``
+    is (8 here): each state operator's progress reports 1, and the offset
+    log, which fixes the count for every restart, records 1. Spark marks
+    the conf behind this internal, so this test is also the tripwire for
+    an upgrade that drops it."""
     import json as _json
 
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     d = tmp_path / "events_dir"
     d.mkdir()
     (d / "events.parquet").symlink_to(f"{SF_SMALL}/events.parquet")
 
-    shared_before = spark.conf.get("spark.sql.shuffle.partitions")
-    stream_spark = spark.newSession()
-    stream_spark.conf.set("spark.sql.shuffle.partitions", "3")
-
-    tx = as_transactions(events_file_stream(stream_spark, str(d)))
-    agg = streaming_window_metrics(tx, window_duration="10 seconds")
-    name = f"clone_{uuid.uuid4().hex[:8]}"
-    q = write_memory(agg, name, output_mode="complete")
+    tx = as_transactions(events_file_stream(spark, str(d)))
+    agg = streaming_window_metrics(
+        tx.dropDuplicates(["transactionId"]), window_duration="10 seconds"
+    )
+    ckpt = str(tmp_path / "ckpt")
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(f"one_part_{uuid.uuid4().hex[:8]}")
+        .option("checkpointLocation", ckpt)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
     try:
         assert q.awaitTermination(120), "stream did not finish"
-        lp = q.lastProgress
-        lp = lp if isinstance(lp, dict) else _json.loads(lp.json)
-        ops = lp.get("stateOperators") or []
-        assert ops, "no stateful operator reported progress"
-        n_parts = ops[0].get("numShufflePartitions")
-        assert n_parts == 3, f"state partitions {n_parts}, clone conf ignored"
-        # memory-sink temp view is session-scoped: visible on the clone
-        assert stream_spark.table(name).count() > 0
-        # the shared session never saw the clone's setting
-        assert spark.conf.get("spark.sql.shuffle.partitions") == shared_before
+        ops = [
+            o
+            for p in q.recentProgress
+            for o in _json.loads(p.json)["stateOperators"]
+        ]
     finally:
         if q.isActive:
             q.stop()
+    assert {o["operatorName"] for o in ops} >= {"dedupe", "stateStoreSave"}
+    assert {o["numShufflePartitions"] for o in ops} == {1}
+    assert _offset_log_state_partitions(ckpt) == {"1"}
 
 
-def test_checkpoint_kill_and_restart_is_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("first_run_partitions", [1, 4])
+def test_checkpoint_kill_and_restart_is_exactly_once(spark, tmp_path, first_run_partitions):
     """Fault tolerance: a streaming query killed mid-run resumes from its
     checkpoint and the transactional file sink delivers EXACTLY-ONCE
     output — the killed-and-restarted run's rows equal an uninterrupted
     run of the same pipeline, with no window duplicated or lost. This is
     the recovery semantics a 24/7 deployment of the flagship aggregate
     rests on (checkpoint = source offsets + state store; sink dedup via
-    the _spark_metadata commit log)."""
+    the _spark_metadata commit log).
+
+    The first run starts with ``first_run_partitions`` state partitions:
+    4 stands for a checkpoint made before ``get_spark`` set one. The
+    restart runs on the default session (one partition for a new query)
+    and must keep the checkpoint's count."""
+    import json as _json
     import time as _time
+
+    from flink_stream_processing_spark.session import STATE_PARTITIONS_CONF
 
     src = tmp_path / "events_src"
     src.mkdir()
@@ -582,15 +609,12 @@ def test_checkpoint_kill_and_restart_is_exactly_once(spark, tmp_path):
     # between committed batches with work still outstanding
     ev.repartition(12).write.parquet(str(src / "files"))
 
-    # state partitions sized to the workload on a session clone (the
-    # engine's own sizing rule) — 8-partition state commits keep the 12
-    # micro-batches cheap even when the suite runs under machine load
-    stream_spark = spark.newSession()
-    stream_spark.conf.set("spark.sql.shuffle.partitions", "8")
+    first_spark = spark.newSession()
+    first_spark.conf.set(STATE_PARTITIONS_CONF, str(first_run_partitions))
 
-    def run(out: str, ckpt: str, kill_after_batches: int | None) -> None:
+    def run(session, out: str, ckpt: str, kill_after_batches: int | None):
         stream = events_file_stream(
-            stream_spark, str(src / "files"), max_files_per_trigger=1
+            session, str(src / "files"), max_files_per_trigger=1
         )
         agg = streaming_window_metrics(as_transactions(stream))
         q = (
@@ -603,23 +627,34 @@ def test_checkpoint_kill_and_restart_is_exactly_once(spark, tmp_path):
         )
         if kill_after_batches is None:
             assert q.awaitTermination(300), "uninterrupted run did not finish"
-            return
+            return q
         deadline = _time.time() + 300
         while _time.time() < deadline:
             if not q.isActive or len(q.recentProgress) >= kill_after_batches:
                 break
             _time.sleep(0.05)
         q.stop()  # crash: whatever batch is in flight is abandoned
+        return q
 
     # reference: the same pipeline, never killed
     ref_out, ref_ckpt = str(tmp_path / "ref_out"), str(tmp_path / "ref_ckpt")
-    run(ref_out, ref_ckpt, kill_after_batches=None)
+    run(spark, ref_out, ref_ckpt, kill_after_batches=None)
 
     # killed run: stop after ~2 committed batches, then restart from the
-    # same checkpoint into the same sink and let it drain
+    # same checkpoint into the same sink, on the default session, and let
+    # it drain
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    run(out, ckpt, kill_after_batches=2)
-    run(out, ckpt, kill_after_batches=None)
+    run(first_spark, out, ckpt, kill_after_batches=2)
+    restarted = run(spark, out, ckpt, kill_after_batches=None)
+
+    # the checkpoint's partition count survives the restart
+    kept = {
+        o["numShufflePartitions"]
+        for p in restarted.recentProgress
+        for o in _json.loads(p.json)["stateOperators"]
+    }
+    assert kept == {first_run_partitions}
+    assert _offset_log_state_partitions(ckpt) == {str(first_run_partitions)}
 
     got = spark.read.parquet(out)
     ref = spark.read.parquet(ref_out)
